@@ -1,0 +1,1 @@
+"""Exchange benchmark: see README.md in this directory."""
