@@ -259,26 +259,12 @@ _R16_SET = HEADLINE[:78]       # the full 78-head panel BENCH_r16 ran
 def streaming_floor(spark, sf_dir):
     """The streaming-machinery sentinel (see module docstring): same
     events file source shape as every streaming_* entry, no enrichment,
-    no state, no Python — pure source → memory-sink floor."""
-    import tempfile
-    import uuid
-
+    no state, no Python — pure source → memory-sink floor, through the
+    same run lifecycle as the entries."""
     from mktd6_flink_spark.plans import driver_queries as dq
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", dq._STREAM_PARTS)
-    raw = dq._events_stream(spark, sf_dir)
-    name = f"floor_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="floor_ckpt_")
-    q = (raw.writeStream.format("memory").queryName(name)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    spark.conf.set("spark.sql.shuffle.partitions", _old_parts)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("floor sentinel drain exceeded 300s")
-    return spark.table(name)
+    return dq._run_stream_to_table(
+        spark, dq._events_stream(spark, sf_dir), "floor")
 
 
 def sf_from_dir(d: str) -> float:

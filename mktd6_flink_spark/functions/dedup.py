@@ -67,16 +67,6 @@ def exact_dedup(df: DataFrame, text: str = "text",
     )
 
 
-def sql_exact_dedup(table: str = "documents", text: str = "text",
-                    id_col: str = "doc_id") -> str:
-    return f"""
-    SELECT md5({text}) AS content_hash,
-           min({id_col}) AS kept_id,
-           CAST(count(*) AS INTEGER) AS n_dupes
-    FROM {table} GROUP BY 1
-    """
-
-
 # -- shingles + MinHash -------------------------------------------------------
 
 def shingles(text: Column, n: int = SHINGLE_N) -> Column:

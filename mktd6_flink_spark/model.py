@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -211,9 +211,3 @@ INITIAL_TRADER_STATE = {
     "fedMonkeys": 0,
     "inFlightInvestments": 0,
 }
-
-
-def trader_key(team: Column | str = "team", name: Column | str = "name") -> Column:
-    """`team + "_" + name` composite key (TraderKeySelector.java:7-12)."""
-    return F.concat_ws("_", F.col(team) if isinstance(team, str) else team,
-                       F.col(name) if isinstance(name, str) else name)

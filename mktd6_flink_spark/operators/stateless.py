@@ -160,24 +160,6 @@ def updater_from_market_order(order_type: Column, shares: Column, price: Column)
     return coins_diff, shares_diff
 
 
-def updater_struct(txn_id: Column, utype: Column, time: Column,
-                   coins_diff: Column, shares_diff: Column,
-                   add_bailout: Column | None = None,
-                   fed_monkeys: Column | None = None,
-                   invest_diff: Column | None = None) -> Column:
-    """A full TraderStateUpdater struct (TraderStateUpdater.java:28-57)."""
-    return F.struct(
-        txn_id.alias("txnId"),
-        utype.alias("type"),
-        time.alias("time"),
-        coins_diff.cast("double").alias("coinsDiff"),
-        shares_diff.cast("int").alias("sharesDiff"),
-        (F.lit(False) if add_bailout is None else add_bailout).alias("addBailout"),
-        (F.lit(0) if fed_monkeys is None else fed_monkeys).cast("int").alias("fedMonkeys"),
-        (F.lit(0) if invest_diff is None else invest_diff).cast("int").alias("investDiff"),
-    )
-
-
 def updater_from_investment(invested: Column):
     """P12b — Investment -> deltas (TraderStateUpdater.java:153-162):
     coinsDiff = -invested, investDiff = +1.

@@ -17,34 +17,12 @@ References:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import cache
 from .blocks import with_block_id
-
-
-def tumbling_reduce(df: DataFrame, time_col: str, key_cols: list[str],
-                    window_len: str, aggs: list[Column],
-                    watermark: str | None = None) -> DataFrame:
-    """W2 — tumbling event-time window + reduce (Chapter03:125-139).
-
-    Batch: ``groupBy(window(time, len), keys).agg(...)``. For streaming
-    inputs pass ``watermark`` (e.g. "10 milliseconds", T1) — late rows beyond
-    it are dropped, matching Flink's default no-allowed-lateness behavior.
-    Returns window start/end as ``window_start``/``window_end`` columns.
-    """
-    if watermark and df.isStreaming:
-        df = df.withWatermark(time_col, watermark)
-    out = df.groupBy(F.window(time_col, window_len).alias("_w"), *key_cols).agg(*aggs)
-    agg_names = [c for c in out.columns if c != "_w" and c not in key_cols]
-    return out.select(
-        F.col("_w.start").alias("window_start"),
-        F.col("_w.end").alias("window_end"),
-        *key_cols,
-        *agg_names,
-    )
 
 
 def window_sum_first(df: DataFrame, time_col: str, key: str, value: str,
@@ -94,21 +72,6 @@ def running_sum(df: DataFrame, key_cols: list[str], order_cols: list[str],
 # W5 — the dashboard aggregations (kibana-dashboard.json). Each mirrors one
 # Kibana visState over the ES-indexed trader-states / share-price docs.
 # ---------------------------------------------------------------------------
-
-def avg_per_minute(df: DataFrame, time_col: str, value: str) -> DataFrame:
-    """W5a — avg(value) per 1-minute date_histogram ("Average Share Price
-    coins per minute" line chart)."""
-    return (
-        df.groupBy(F.date_trunc("minute", F.col(time_col)).alias("minute"))
-        .agg(F.avg(value).alias(f"avg_{value}"))
-    )
-
-
-def sum_by(df: DataFrame, keys: list[str], value: str) -> DataFrame:
-    """W5b — sum(value) per key(s) ("Monkeys Fed" / "Sum of Bailouts per Team
-    and Trader")."""
-    return df.groupBy(*keys).agg(F.sum(value).alias(f"sum_{value}"))
-
 
 def top_k(df: DataFrame, key: str, value: str, k: int = 5) -> DataFrame:
     """W5c — top-k keys by sum(value) desc ("terms trader size 5 order

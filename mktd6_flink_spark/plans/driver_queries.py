@@ -22,13 +22,19 @@ Portability rules used throughout (verified primitive-by-primitive):
 
 from __future__ import annotations
 
-import glob as glob_mod
+import atexit
+import contextlib
 import json
 import os
+import shutil
+import tempfile
+import time
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..functions import dedup as dd
@@ -47,6 +53,7 @@ from ..functions.hashing import (
 )
 from ..model import TEAMS
 from ..operators import asof, folds, routing, stateless, windows
+from ..streaming import sources
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -59,11 +66,11 @@ ORACLES: dict[str, str] = {}
 # state partitions win — measured at sf0.1: 8 halves every stateful
 # entry's wall time vs 16 (st7 2.39 s → 1.28 s) with zero effect on
 # results (folds are per-KEY; partition count only changes placement).
-# On a real cluster this knob is the session's shuffle-partition sizing
-# (~2-3× total cores): at 100 TB the per-store fixed cost is amortized
-# by real state volume and MORE partitions are correct — which is why
-# this is an env knob, not a hard-code.
-_STREAM_PARTS = os.environ.get("SPARK_GRAFT_STREAM_PARTS", "8")
+# On a real cluster this count follows the session's shuffle-partition
+# sizing (~2-3× total cores): at 100 TB the per-store fixed cost is
+# amortized by real state volume and MORE partitions are correct. It is
+# read at call time, so a deployment (or a test sweep) can rebind it.
+_STREAM_PARTS = "8"
 
 
 def _await_done(q, secs: int = 300) -> None:
@@ -84,6 +91,136 @@ def _await_done(q, secs: int = 300) -> None:
                 f"streaming drain exceeded {secs}s (query {q.name or q.id})")
 
 
+# ---------------------------------------------------------------------------
+# The run lifecycle every live entry shares: scratch dirs, the scoped
+# state-store partition count, and the availableNow drains into a memory
+# sink or a foreachBatch spill.
+# ---------------------------------------------------------------------------
+
+# One scratch root per process, made on first use and removed at exit.
+_SCRATCH_ROOT: str | None = None
+# Memory-sink views made since the last entry boundary (``register``
+# drops them when the next entry starts).
+_SINK_VIEWS: list[str] = []
+
+
+def _remove_scratch_root(root: str, pid: int) -> None:
+    # a forked child inherits the hook; only the creating process owns
+    # the root
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _scratch(prefix: str) -> str:
+    """A fresh temp dir under this process's scratch root. A checkpoint
+    is removed as soon as its query drains; dirs that back a returned
+    lazy DataFrame (spill, topic and round-trip tables) live until
+    interpreter exit, when an ``atexit`` hook removes the whole root."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None or not os.path.isdir(_SCRATCH_ROOT):
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="mktd6_scratch_")
+        atexit.register(_remove_scratch_root, _SCRATCH_ROOT, os.getpid())
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+
+
+@contextlib.contextmanager
+def _stream_partitions(spark, parts: str | None = None):
+    """Pin ``spark.sql.shuffle.partitions`` to the state-store count
+    (``_STREAM_PARTS`` unless ``parts`` overrides it) for the block and
+    restore the session value afterwards, also when the block raises.
+    A streaming query binds the count when it STARTS — at gate/bench SF
+    a plain driver session's 200 is pure per-micro-batch scheduling
+    overhead — so wrap ``.start()`` plus any eager batch work that must
+    run under the same count."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", parts or _STREAM_PARTS)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _table_stream(spark, sf_dir: str, table: str) -> DataFrame:
+    """readStream over one driver table: a file source needs a declared
+    schema (taken from the batch read) and a glob pinning the table
+    inside the shared sf dir."""
+    return (spark.readStream.schema(
+        spark.read.parquet(f"{sf_dir}/{table}.parquet").schema)
+        .option("pathGlobFilter", f"{table}.parquet")
+        .parquet(sf_dir))
+
+
+def _run_stream_to_table(spark, out, prefix: str, mode: str = "append",
+                         parts: str | None = None,
+                         until_rows: int | None = None):
+    """availableNow → memory sink; returns the sink table DataFrame.
+    ``mode="complete"`` for built-in streaming aggregations (the memory
+    sink holds the latest full result); ``parts`` overrides the
+    state-store count for operators with heavier per-partition state
+    machinery (the stream-stream join). ``until_rows`` is for timer
+    entries whose output arrives on no-data micro-batches after the
+    source drains: the query runs on a 200 ms processing-time trigger
+    until the sink holds that many rows (or 180 s pass), then stops —
+    the caller checks the final count."""
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    ckpt = _scratch(f"{prefix}_ckpt_")
+    writer = sources.memory_sink(out, name, ckpt).outputMode(mode)
+    if until_rows is not None:
+        writer = writer.trigger(processingTime="200 milliseconds")
+    with _stream_partitions(spark, parts):
+        q = writer.start()
+    _SINK_VIEWS.append(name)
+    if until_rows is None:
+        _await_done(q, 300)
+        shutil.rmtree(ckpt, ignore_errors=True)
+        return spark.table(name)
+    deadline = time.time() + 180
+    while time.time() < deadline and spark.table(name).count() < until_rows:
+        time.sleep(0.5)
+    q.stop()
+    _await_done(q, 60)
+    # the stop cancels any micro-batch in flight, and its tasks may still
+    # be aborting into the checkpoint: it stays until the exit hook
+    return spark.table(name)
+
+
+def _spill_writer(out_dir: str, batch_frame):
+    """foreachBatch writer with the IDEMPOTENT-REPLAY contract:
+    foreachBatch is at-least-once — after a failure the engine REPLAYS
+    the last batch id, and a plain mode('append') spill would
+    duplicate that batch's rows. Each batch instead OVERWRITES its own
+    deterministic ``b{bid}`` subdir with ``batch_frame(b, bid)``, so a
+    replay converges to the same bytes (the batch-id-keyed pattern the
+    Structured Streaming guide prescribes for exactly-once foreachBatch
+    sinks)."""
+    def _batch(b, bid):
+        (batch_frame(b, bid).write.mode("overwrite")
+         .parquet(os.path.join(out_dir, f"b{int(bid):05d}")))
+    return _batch
+
+
+def _run_stream_to_spill(spark, stream, prefix: str,
+                         schema: str | StructType, batch_frame,
+                         mode: str = "append"):
+    """availableNow → foreachBatch spill (``_spill_writer``) into a
+    scratch dir seeded with an empty ``schema``-typed ``bseed``, so an
+    all-empty stream still reads back as a typed frame. Returns the
+    spill read back as ``b*`` and the drained query."""
+    out_dir = _scratch(f"{prefix}_spill_")
+    ckpt = _scratch(f"{prefix}_ckpt_")
+    spark.createDataFrame([], schema).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "bseed"))
+    writer = (stream.writeStream.outputMode(mode)
+              .foreachBatch(_spill_writer(out_dir, batch_frame))
+              .option("checkpointLocation", ckpt)
+              .trigger(availableNow=True))
+    with _stream_partitions(spark):
+        q = writer.start()
+    _await_done(q, 300)
+    shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.read.parquet(os.path.join(out_dir, "b*")), q
+
+
 def register(name: str, sql: str | None = None):
     def deco(fn):
         import functools
@@ -98,8 +235,13 @@ def register(name: str, sql: str | None = None):
             # earlier one mid-build; round 12 found exactly that
             # clobber in pipeline_curation_v2). Live caches stay
             # bounded to one entry's worth, as before.
+            # The same boundary drops the previous entry's memory-sink
+            # views (a returned DataFrame stays valid: its plan holds
+            # the sink data, not the view name).
             from ..operators import cache
             cache.release_twophase_caches()
+            while _SINK_VIEWS:
+                spark.catalog.dropTempView(_SINK_VIEWS.pop())
             return fn(spark, sf_dir)
 
         QUERIES[name] = entry
@@ -1731,12 +1873,7 @@ def streaming_gopher_rules(spark, sf_dir):
     events lesson: never hard-code an external table's stream
     schema)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     out = tx.gopher_rules(raw)
     return _run_stream_to_table(spark, out, "gopher_stream")
 
@@ -2148,12 +2285,7 @@ def streaming_frame_sample(spark, sf_dir):
     the source partitioning); malformed streams drop per row on the
     hot path exactly as in batch."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     out = mm.frame_sample_pgm(mm.pgm_stream_from_documents(raw))
     return _run_stream_to_table(spark, out, "mm_ingest")
 
@@ -2325,12 +2457,7 @@ def streaming_gif_frame_sample(spark, sf_dir):
     FOUR paths: P5 batch+streaming, GIF batch+streaming). Payloads
     never shuffle; malformed streams drop per row."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     out = mm.gif_frame_sample(mm.gif_anim_media_from_documents(raw))
     return _run_stream_to_table(spark, out, "mm_gif_anim_ingest")
 
@@ -2375,12 +2502,7 @@ def streaming_gif_frame_composite(spark, sf_dir):
     oracle (sql_frame_sample — five paths pinned by one SQL twin).
     Payloads never shuffle; malformed streams drop per row."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     out = mm.gif_frame_composite(
         mm.gif_anim_delta_media_from_documents(raw))
     return _run_stream_to_table(spark, out, "mm_gif_delta_ingest")
@@ -2441,12 +2563,7 @@ def streaming_decode_jpeg(spark, sf_dir):
     micro-batching; graded against the SAME oracle. Payloads never
     shuffle; malformed blobs drop per row on the hot path."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     out = mm.decode_jpeg(mm.jpeg_media_from_documents(raw))
     return _run_stream_to_table(spark, out, "mm_jpeg_ingest")
 
@@ -2464,12 +2581,7 @@ def streaming_decode_png_rgb(spark, sf_dir):
     against the SAME oracle. Payloads never shuffle; malformed blobs
     drop per row."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     out = mm.decode_png_rgb_features(mm.png_rgb_media_from_documents(raw))
     return _run_stream_to_table(spark, out, "mm_png_rgb_ingest")
 
@@ -2486,12 +2598,7 @@ def streaming_decode_gif(spark, sf_dir):
     micro-batching; graded against the SAME shared oracle. Payloads
     never shuffle; malformed blobs drop per row."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     out = mm._rgb_png_features(mm.gif_media_from_documents(raw),
                                "decode_gif_rgb", module="gif")
     return _run_stream_to_table(spark, out, "mm_gif_ingest")
@@ -2532,12 +2639,7 @@ def streaming_decode_bmp(spark, sf_dir):
     the SAME shared oracle. Payloads never shuffle; malformed blobs
     drop per row."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     out = mm._rgb_png_features(mm.bmp_media_from_documents(raw),
                                "decode_bmp_rgb", module="bmp")
     return _run_stream_to_table(spark, out, "mm_bmp_ingest")
@@ -2583,12 +2685,7 @@ def streaming_decode_ico(spark, sf_dir):
     graded against the SAME shared oracle. Payloads never shuffle;
     malformed blobs drop per row."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     out = mm._rgb_png_features(mm.ico_media_from_documents(raw),
                                "decode_ico_rgb", module="ico")
     return _run_stream_to_table(spark, out, "mm_ico_ingest")
@@ -2630,12 +2727,7 @@ def streaming_decode_flac(spark, sf_dir):
     graded against the SAME shared oracle. Payloads never shuffle;
     malformed blobs drop per row."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     out = mm.decode_flac(mm.flac_media_from_documents(raw))
     return _run_stream_to_table(spark, out, "mm_flac_ingest")
 
@@ -2674,12 +2766,7 @@ def streaming_decode_tiff(spark, sf_dir):
     graded against the SAME shared oracle. Payloads never shuffle;
     malformed blobs drop per row."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     out = mm._gray_features(mm.tiff_media_from_documents(raw),
                             "decode_tiff_gray", module="tiff")
     return _run_stream_to_table(spark, out, "mm_tiff_ingest")
@@ -2716,12 +2803,7 @@ def streaming_decode_aiff(spark, sf_dir):
     the SAME shared oracle. Payloads never shuffle; malformed blobs
     drop per row."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     out = mm.decode_aiff(mm.aiff_media_from_documents(raw))
     return _run_stream_to_table(spark, out, "mm_aiff_ingest")
 
@@ -2794,12 +2876,7 @@ def streaming_decode_report(spark, sf_dir):
     arithmetic oracle as the batch twin. Payloads never shuffle;
     state is one row per (modality, reason) pair."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     report = mm.attrition_report_from_documents(raw)
     return _run_stream_update_latest(spark, report, "mm_attrition",
                                      ["modality", "reason"])
@@ -3846,36 +3923,16 @@ def streaming_ivf_assign(spark, sf_dir):
     replay converges instead of duplicating (the exactly-once
     foreachBatch sink pattern). Graded against the SAME oracle as the
     batch twin."""
-    import tempfile
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     emb = load(spark, sf_dir, "embeddings")
-    out_dir = tempfile.mkdtemp(prefix="ivf_assign_out_")
-    ckpt = tempfile.mkdtemp(prefix="ivf_assign_ckpt_")
-    empty = spark.createDataFrame(
-        [], "vec_id long, centroid_id long, assign_cos double")
-    empty.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "bseed"))
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-
-    def _batch(b, bid):
-        # the batch's vectors against the static centroid model: the
-        # shared helper broadcasts centroids and max_by-combines per
-        # vector, all batch-local
-        (_ivf_assign_frame(b, cents_src=emb)
-         .write.mode("overwrite")
-         .parquet(os.path.join(out_dir, f"b{int(bid):05d}")))
-
-    q = (raw.writeStream.foreachBatch(_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    _await_done(q, 300)
-    return spark.read.parquet(os.path.join(out_dir, "b*"))
+    # the batch's vectors against the static centroid model: the shared
+    # helper broadcasts centroids and max_by-combines per vector, all
+    # batch-local
+    spill, _q = _run_stream_to_spill(
+        spark, _table_stream(spark, sf_dir, "embeddings"), "ivf_assign",
+        "vec_id long, centroid_id long, assign_cos double",
+        lambda b, _bid: _ivf_assign_frame(b, cents_src=emb))
+    return spill
 
 
 @register("sim_pq_codes", sim.sql_pq_codes("embeddings", _EMB_DIM))
@@ -3975,11 +4032,18 @@ def curation_with_lineage(spark, sf_dir):
     quality = cache.maybe_persist(tx.quality_stats(docs), force=True)
     langs = cache.maybe_persist(tx.lang_id(docs), force=True)
 
+    # a thread's exception dies with the thread; keep it and re-raise
+    # on the caller's thread once the overlap ends
+    gate_errors: list[Exception] = []
+
     def _materialize_gates():
-        spark.sparkContext.setJobDescription(
-            "curation: quality+lang gates (overlapped with CC)")
-        quality.write.format("noop").mode("overwrite").save()
-        langs.write.format("noop").mode("overwrite").save()
+        try:
+            spark.sparkContext.setJobDescription(
+                "curation: quality+lang gates (overlapped with CC)")
+            quality.write.format("noop").mode("overwrite").save()
+            langs.write.format("noop").mode("overwrite").save()
+        except Exception as e:
+            gate_errors.append(e)
 
     warm = InheritableThread(target=_materialize_gates)
     warm.start()
@@ -3994,6 +4058,8 @@ def curation_with_lineage(spark, sf_dir):
                 .select("doc_id"))
     finally:
         warm.join()
+    if gate_errors:
+        raise gate_errors[0]
     # observe nodes live ONLY on the final chain: wrapping the shared
     # _docs2 subtree would replicate the CollectMetrics node into every
     # branch (quality/lang/LSH/CC) and its metric into each of their
@@ -4522,18 +4588,9 @@ def _fertility_finalize(per_doc):
 
 
 def _fertility_spill_writer(vdf, out_dir):
-    """foreachBatch writer with the IDEMPOTENT-REPLAY contract:
-    foreachBatch is at-least-once — after a failure the engine REPLAYS
-    the last batch id, and a plain mode('append') spill would
-    duplicate that batch's rows. Each batch instead OVERWRITES its own
-    deterministic ``b{bid}`` subdir, so a replay converges to the same
-    bytes (the batch-id-keyed pattern the Structured Streaming guide
-    prescribes for exactly-once foreachBatch sinks)."""
-    def _batch(b, bid):
-        (_fertility_per_doc(vdf, b)
-         .write.mode("overwrite")
-         .parquet(os.path.join(out_dir, f"b{int(bid):05d}")))
-    return _batch
+    """The per-doc fertility collapse as an idempotent-replay
+    foreachBatch writer (``_spill_writer``)."""
+    return _spill_writer(out_dir, lambda b, _bid: _fertility_per_doc(vdf, b))
 
 
 def _run_fertility_stream(spark, vdf, src_dir, schema,
@@ -4547,28 +4604,15 @@ def _run_fertility_stream(spark, vdf, src_dir, schema,
     the old streaming groupBy kept one state row per doc forever).
     Returns (per_doc DataFrame, recentProgress list) so tests can
     assert the no-state-operator contract structurally."""
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="bpe_fert_doc_")
-    ckpt = tempfile.mkdtemp(prefix="bpe_fert_ckpt_")
-    # seed the spill dir with the schema so an all-empty stream still
-    # reads back as a typed empty frame
-    empty = spark.createDataFrame(
-        [], "lang string, doc_id long, n_words long, n_tokens long, "
-            "_nc long")
-    empty.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "bseed"))
     reader = spark.readStream.schema(schema)
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files))
     raw = reader.option("pathGlobFilter", glob).parquet(src_dir)
-    q = (raw.writeStream
-         .foreachBatch(_fertility_spill_writer(vdf, out_dir))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    _await_done(q, 300)
-    return (spark.read.parquet(os.path.join(out_dir, "b*")),
-            list(q.recentProgress))
+    per_doc, q = _run_stream_to_spill(
+        spark, raw, "bpe_fert",
+        "lang string, doc_id long, n_words long, n_tokens long, _nc long",
+        lambda b, _bid: _fertility_per_doc(vdf, b))
+    return per_doc, list(q.recentProgress)
 
 
 @register("pipeline_bpe_fertility", expand_round6("WITH "
@@ -4892,18 +4936,8 @@ def streaming_st1_ema(spark, sf_dir):
     fold oracle as the batch twin — the streaming engine's own output
     is what the driver verifies here. Single micro-batch ⇒ one ordered
     fold per key, matching the reference's Kafka-order semantics."""
-    import uuid
-
     from ..streaming import stateful
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Bound state-store tasks: at gate/bench SF the session default
-    # (200 on a plain driver session) is pure scheduling overhead per
-    # micro-batch. Partition count binds when the query STARTS; the
-    # session value is restored right after .start().
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
     # the file stream source needs a directory: stream the sf dir with a
     # glob pinned to the events table
     raw = _events_stream(spark, sf_dir).select(
@@ -4913,16 +4947,7 @@ def streaming_st1_ema(spark, sf_dir):
         lambda: stateful.ema_step(0.1, id_col="event_id"),
         "event_type string, event_id long, ema double",
         "ema double", stateful.pack1, stateful.unpack1)
-    name = f"st1_stream_{uuid.uuid4().hex[:8]}"
-    import tempfile
-
-    ckpt = tempfile.mkdtemp(prefix="st1_stream_ckpt_")
-    q = (out.writeStream.format("memory").queryName(name)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    spark.conf.set('spark.sql.shuffle.partitions', _old_parts)
-    _await_done(q, 300)
-    return spark.table(name).select(
+    return _run_stream_to_table(spark, out, "st1_stream").select(
         "event_type", "event_id", round_portable(F.col("ema")).alias("ema"))
 
 
@@ -5266,13 +5291,7 @@ def streaming_cdc_upsert(spark, sf_dir):
     merging a changelog as it arrives must lose nothing vs merging
     it at rest."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .select("doc_id", "text")
-    )
+    raw = _table_stream(spark, sf_dir, "documents").select("doc_id", "text")
     base = raw.select(
         "doc_id", "text", F.lit(1).cast("long").alias("version"),
         F.lit(False).alias("is_delete"))
@@ -5755,19 +5774,8 @@ def streaming_st6_ledger(spark, sf_dir):
     both per-event engines — EMA and the validated trader ledger
     (MarketDataflow.java:284-310) — under the driver's gate via the
     streaming runtime itself, not a batch stand-in."""
-    import tempfile
-    import uuid
-
     from ..streaming import stateful
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Bound state-store tasks: at gate/bench SF the session default
-    # (200 on a plain driver session) is pure scheduling overhead per
-    # micro-batch. Partition count binds when the query STARTS; the
-    # session value is restored right after .start().
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
     raw = _events_stream(spark, sf_dir)
     upd = _updaters_from(enrich_events(raw)).select(
         "trader", "ts", "event_id",
@@ -5783,14 +5791,7 @@ def streaming_st6_ledger(spark, sf_dir):
         "inFlightInvestments int",
         lambda s: (float(s[0]), int(s[1]), int(s[2]), int(s[3]), int(s[4])),
         lambda r: tuple(r))
-    name = f"st6_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="st6_stream_ckpt_")
-    q = (out.writeStream.format("memory").queryName(name)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    spark.conf.set('spark.sql.shuffle.partitions', _old_parts)
-    _await_done(q, 300)
-    return spark.table(name).select(
+    return _run_stream_to_table(spark, out, "st6_stream").select(
         "trader",
         F.col("txnId").alias("txn_id"),
         F.col("type").alias("utype"),
@@ -5811,17 +5812,6 @@ def streaming_w2_window(spark, sf_dir):
     sink (complete mode), hash-checked against the SAME oracle as the
     batch twin w2_tumbling_sum — event-time windowing itself is now
     under the driver's gate, not just its batch stand-in."""
-    import tempfile
-    import uuid
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Bound state-store tasks: at gate/bench SF the session default
-    # (200 on a plain driver session) is pure scheduling overhead per
-    # micro-batch. Partition count binds when the query STARTS; the
-    # session value is restored right after .start().
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
     raw = _events_stream(spark, sf_dir)
     agg = (
         enrich_events(raw)
@@ -5838,15 +5828,7 @@ def streaming_w2_window(spark, sf_dir):
             "trader", "sum_value", "first_event",
         )
     )
-    name = f"w2_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="w2_stream_ckpt_")
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    spark.conf.set('spark.sql.shuffle.partitions', _old_parts)
-    _await_done(q, 300)
-    return spark.table(name)
+    return _run_stream_to_table(spark, agg, "w2_stream", mode="complete")
 
 
 @register("st8_return_amounts", expand_round6(f"""
@@ -6491,19 +6473,8 @@ def streaming_w3_running_sum(spark, sf_dir):
     arrival order; cents make it exact) — hash-checked against the
     batch twin's oracle. Fourth streaming-engine entry in the gate
     (ST1, ST6, W2, W3)."""
-    import tempfile
-    import uuid
-
     from ..streaming import stateful
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Bound state-store tasks: at gate/bench SF the session default
-    # (200 on a plain driver session) is pure scheduling overhead per
-    # micro-batch. Partition count binds when the query STARTS; the
-    # session value is restored right after .start().
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
     raw = _events_stream(spark, sf_dir)
     ev = enrich_events(raw).select(
         "event_type", "ts", "event_id", _cents(F.col("value")).alias("_c"))
@@ -6516,14 +6487,8 @@ def streaming_w3_running_sum(spark, sf_dir):
         "event_type string, event_id long, running_sum double",
         "total long",
         lambda s: (int(s[0]),), lambda r: (int(r[0]),))
-    name = f"w3_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="w3_stream_ckpt_")
-    q = (out.writeStream.format("memory").queryName(name)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    spark.conf.set('spark.sql.shuffle.partitions', _old_parts)
-    _await_done(q, 300)
-    return spark.table(name).select("event_id", "event_type", "running_sum")
+    return _run_stream_to_table(spark, out, "w3_stream").select(
+        "event_id", "event_type", "running_sum")
 
 
 @register("w5_distinct_users_per_team", f"""
@@ -6731,12 +6696,7 @@ def streaming_weighted_sample(spark, sf_dir):
     from ..streaming import stateful
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _table_stream(spark, sf_dir, "documents")
     w = F.greatest(F.col("n_chars"), F.lit(1))
     src = raw.select(
         F.pmod(F.col("doc_id"), F.lit(_WSAMP_SHARDS)).cast("string")
@@ -7134,19 +7094,8 @@ def streaming_st2_product(spark, sf_dir):
     (SharePriceDataflow.java:72-96) through the live streaming runtime;
     the oracle replays every prefix of the same left-to-right product.
     Fifth streaming-engine gate entry (ST1, ST2, ST6, W2, W3)."""
-    import tempfile
-    import uuid
-
     from ..streaming import stateful
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Bound state-store tasks: at gate/bench SF the session default
-    # (200 on a plain driver session) is pure scheduling overhead per
-    # micro-batch. Partition count binds when the query STARTS; the
-    # session value is restored right after .start().
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
     raw = _events_stream(spark, sf_dir)
     ev = enrich_events(raw).select(
         "event_type", "ts", "event_id",
@@ -7156,14 +7105,7 @@ def streaming_st2_product(spark, sf_dir):
         lambda: stateful.product_step(id_col="event_id"),
         "event_type string, event_id long, price_mult double",
         "acc double", stateful.pack1, stateful.unpack1)
-    name = f"st2_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="st2_stream_ckpt_")
-    q = (out.writeStream.format("memory").queryName(name)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    spark.conf.set('spark.sql.shuffle.partitions', _old_parts)
-    _await_done(q, 300)
-    return spark.table(name).select(
+    return _run_stream_to_table(spark, out, "st2_stream").select(
         "event_type", "event_id",
         round_portable(F.col("price_mult")).alias("price_mult"))
 
@@ -8578,11 +8520,9 @@ def streaming_cep_absence(spark, sf_dir):
     timestamp per user (declared long — the st/cep schema contract);
     same DuckDB oracle as the batch twin; the input builder is shared
     so the sentinel construction cannot drift between them."""
-    import tempfile
-
     from ..streaming import stateful
 
-    topic = tempfile.mkdtemp(prefix="cepabs_topic_")
+    topic = _scratch("cepabs_topic_")
     _cep_absence_input(spark, sf_dir).write.mode("overwrite") \
         .parquet(topic)
     src = spark.readStream.schema(
@@ -8943,20 +8883,10 @@ def streaming_st8_timer(spark, sf_dir):
     the mitigation for DIVERGENCES.md #4). The gate hashes the emitted
     RETURN updaters, so a timer that never fires or fires twice fails
     the row count, and a state round-trip bug fails the hash."""
-    import tempfile
-    import time as _time
-    import uuid
-
     from ..streaming import stateful
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Bound state-store tasks: at gate/bench SF the session default
-    # (200 on a plain driver session) is pure scheduling overhead per
-    # micro-batch. Partition count binds when the query STARTS; the
-    # session value is restored right after .start().
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
     # Timers fire on the micro-batches AFTER the data drains — those
     # are no-data batches, so the default-true conf must stay on for
     # the timer wheel to turn. Pin it rather than assume the default.
@@ -8973,9 +8903,11 @@ def streaming_st8_timer(spark, sf_dir):
         F.greatest(F.least(F.col("delay_ms"), F.lit(500)), F.lit(1))
         .cast("int").alias("delay_ms"),
     )
-    expected = base.count()
-    topic = tempfile.mkdtemp(prefix="st8_topic_")
-    base.write.mode("overwrite").parquet(topic)
+    topic = _scratch("st8_topic_")
+    # the topic staging runs under the state-store count too
+    with _stream_partitions(spark):
+        expected = base.count()
+        base.write.mode("overwrite").parquet(topic)
 
     src = spark.readStream.schema(
         "txnId string, trader string, amount double, delay_ms int"
@@ -8986,20 +8918,9 @@ def streaming_st8_timer(spark, sf_dir):
         "investDiff int",
         lambda row: row["amount"],
     )
-    name = f"st8_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="st8_stream_ckpt_")
-    q = (out.writeStream.format("memory").queryName(name)
-         .option("checkpointLocation", ckpt)
-         .trigger(processingTime="200 milliseconds").start())
-    spark.conf.set('spark.sql.shuffle.partitions', _old_parts)
-    deadline = _time.time() + 180
-    while _time.time() < deadline:
-        if spark.table(name).count() >= expected:
-            break
-        _time.sleep(0.5)
-    q.stop()
-    _await_done(q, 60)
-    got = spark.table(name).count()
+    emitted = _run_stream_to_table(spark, out, "st8_stream",
+                                   until_rows=expected)
+    got = emitted.count()
     if got < expected:
         # A silent partial result would surface as a confusing gate
         # hash mismatch; fail loudly with the real diagnosis instead.
@@ -9008,7 +8929,7 @@ def streaming_st8_timer(spark, sf_dir):
             "within the 180 s deadline — timer wheel stalled (check "
             "spark.sql.streaming.noDataMicroBatches.enabled and the "
             "trigger interval)")
-    return spark.table(name).select(
+    return emitted.select(
         F.col("txnId").alias("txn_id"), "trader",
         F.col("type").alias("utype"),
         F.col("coinsDiff").alias("coins_diff"),
@@ -9035,16 +8956,10 @@ def streaming_st8_event_time(spark, sf_dir):
     wall clock. Same oracle as streaming_st8_timer: the emitted RETURN
     multiset must equal the batch-precomputed amounts, so a timer that
     never fires, fires twice, or loses state fails the gate."""
-    import tempfile
-    import time as _time
-    import uuid
-
     from ..streaming import stateful
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
     # The firing micro-batch is a NO-DATA batch (the watermark advances
     # after the data batch commits); the timer wheel needs this on.
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
@@ -9062,7 +8977,6 @@ def streaming_st8_event_time(spark, sf_dir):
             F.lit(1767225600000)  # 2026-01-01T00:00:00Z
             + F.pmod(F.col("event_id"), F.lit(1000))).alias("event_time"),
     )
-    expected = base.count()
     # one heartbeat an hour past every possible timeout pushes the
     # watermark over all of them; its own timer is parked ~12 days out
     # so it never emits
@@ -9073,8 +8987,11 @@ def streaming_st8_event_time(spark, sf_dir):
         F.lit(1_000_000_000).cast("long").alias("delay_ms"),
         F.timestamp_millis(
             F.lit(1767225600000 + 3_600_000)).alias("event_time"))
-    topic = tempfile.mkdtemp(prefix="st8et_topic_")
-    base.unionByName(heartbeat).write.mode("overwrite").parquet(topic)
+    topic = _scratch("st8et_topic_")
+    # the topic staging runs under the state-store count too
+    with _stream_partitions(spark):
+        expected = base.count()
+        base.unionByName(heartbeat).write.mode("overwrite").parquet(topic)
 
     src = spark.readStream.schema(
         "txnId string, trader string, amount double, delay_ms long, "
@@ -9086,27 +9003,16 @@ def streaming_st8_event_time(spark, sf_dir):
         "investDiff int",
         lambda row: row["amount"],
     )
-    name = f"st8et_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="st8et_stream_ckpt_")
-    q = (out.writeStream.format("memory").queryName(name)
-         .option("checkpointLocation", ckpt)
-         .trigger(processingTime="200 milliseconds").start())
-    spark.conf.set("spark.sql.shuffle.partitions", _old_parts)
-    deadline = _time.time() + 180
-    while _time.time() < deadline:
-        if spark.table(name).count() >= expected:
-            break
-        _time.sleep(0.5)
-    q.stop()
-    _await_done(q, 60)
-    got = spark.table(name).count()
+    emitted = _run_stream_to_table(spark, out, "st8et_stream",
+                                   until_rows=expected)
+    got = emitted.count()
     if got < expected:
         raise RuntimeError(
             f"streaming_st8_event_time: only {got}/{expected} event-time "
             "timers fired within the 180 s deadline — watermark did not "
             "pass the timeouts (check the heartbeat row and "
             "spark.sql.streaming.noDataMicroBatches.enabled)")
-    return spark.table(name).select(
+    return emitted.select(
         F.col("txnId").alias("txn_id"), "trader",
         F.col("type").alias("utype"),
         F.col("coinsDiff").alias("coins_diff"),
@@ -9124,19 +9030,8 @@ def streaming_w4_cogroup(spark, sf_dir):
     LAST emission per trader against the SAME oracle as the batch twin
     w4_cogroup_latest, so the streaming fold must converge to exactly
     the batch coGroup state."""
-    import tempfile
-    import uuid
-
     from ..streaming import stateful
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Bound state-store tasks: at gate/bench SF the session default
-    # (200 on a plain driver session) is pure scheduling overhead per
-    # micro-batch. Partition count binds when the query STARTS; the
-    # session value is restored right after .start().
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
     raw = _events_stream(spark, sf_dir)
     ev = enrich_events(raw).filter(
         F.col("event_type").isin("click", "view")).select(
@@ -9173,15 +9068,8 @@ def streaming_w4_cogroup(spark, sf_dir):
                    float("-inf") if s[1] is None else s[1]),
         lambda r: (None if r[0] == float("-inf") else r[0],
                    None if r[1] == float("-inf") else r[1]))
-    name = f"w4_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="w4_stream_ckpt_")
-    q = (out.writeStream.format("memory").queryName(name)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    spark.conf.set('spark.sql.shuffle.partitions', _old_parts)
-    _await_done(q, 300)
     # last emission per trader == the batch coGroup's final state
-    emitted = spark.table(name)
+    emitted = _run_stream_to_table(spark, out, "w4_stream")
     return emitted.groupBy("trader").agg(
         F.max_by(
             F.struct("last_txn_coins", "last_price", "decision"),
@@ -9540,15 +9428,8 @@ def streaming_st5_settle(spark, sf_dir):
     price; later orders settle immediately at the latest price. The
     emitted (order, settle_price) rows hash-check against the SAME
     as-of oracle as the batch twin st5_order_buffering."""
-    import tempfile
-    import uuid
-
     from ..streaming import stateful
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
     raw = _events_stream(spark, sf_dir)
     ev = enrich_events(raw)
     orders = ev.filter(F.col("event_type") == "click").select(
@@ -9587,14 +9468,7 @@ def streaming_st5_settle(spark, sf_dir):
                    json.dumps(list(s[1]))),
         lambda r: (None if r[0] == -1.0 else r[0],
                    tuple(tuple(x) for x in json.loads(r[1]))))
-    name = f"st5_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="st5_stream_ckpt_")
-    q = (out.writeStream.format("memory").queryName(name)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    spark.conf.set('spark.sql.shuffle.partitions', _old_parts)
-    _await_done(q, 300)
-    return spark.table(name).select(
+    return _run_stream_to_table(spark, out, "st5_stream").select(
         F.col("txnId").cast("long").alias("event_id"), "settle_price")
 
 
@@ -9608,15 +9482,8 @@ def streaming_st3_burst(spark, sf_dir):
     Python step mirrors the JVM fold arithmetic operation-for-operation
     (same IEEE ops in the same order ⇒ identical bits before the final
     rounding)."""
-    import tempfile
-    import uuid
-
     from ..streaming import stateful
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
     raw = _events_stream(spark, sf_dir)
     ev = enrich_events(raw)
     rand = (
@@ -9654,14 +9521,7 @@ def streaming_st3_burst(spark, sf_dir):
         "running double, prev double, step int",
         lambda s: (float(s[0]), float(s[1]), int(s[2])),
         lambda r: (r[0], r[1], int(r[2])))
-    name = f"st3_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="st3_stream_ckpt_")
-    q = (out.writeStream.format("memory").queryName(name)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    spark.conf.set('spark.sql.shuffle.partitions', _old_parts)
-    _await_done(q, 300)
-    emitted = spark.table(name)
+    emitted = _run_stream_to_table(spark, out, "st3_stream")
     return emitted.groupBy("event_type").agg(
         F.max_by(F.struct("running", "diff", "step"),
                  F.struct("time_ms", "event_id")).alias("_f")
@@ -9673,10 +9533,8 @@ def streaming_st3_burst(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Shared boilerplate for the round-4 live-runtime entries: events readStream
-# source, pinned state-store partitions, availableNow → memory sink. Same
-# shape as the proven r2/r3 streaming entries above (kept verbatim there —
-# graded code doesn't churn).
+# Events stream sources shared by the live-runtime entries (the drains are
+# the run-lifecycle helpers at the top of the module).
 # ---------------------------------------------------------------------------
 
 def _events_stream(spark, sf_dir):
@@ -9724,7 +9582,6 @@ def _staged_events_with_sentinel(spark, sf_dir, sent_us: int,
     single-batch-only. Same ts normalization as ``_events_stream``
     (the sentinel file is written in the data files' own on-disk
     encoding so one stream schema covers both)."""
-    import tempfile
     import time as time_mod
 
     import pyarrow as pa
@@ -9737,7 +9594,7 @@ def _staged_events_with_sentinel(spark, sf_dir, sent_us: int,
     files = ([os.path.join(src, f) for f in sorted(os.listdir(src))
               if f.endswith(".parquet")]
              if os.path.isdir(src) else [src])
-    d = tempfile.mkdtemp(prefix="sjlo_staged_")
+    d = _scratch("sjlo_staged_")
     for i, f in enumerate(files):
         os.symlink(os.path.abspath(f), os.path.join(
             d, f"events-{i:04d}.parquet"))
@@ -9770,37 +9627,11 @@ def _staged_events_with_sentinel(spark, sf_dir, sent_us: int,
                     "user_id", "event_type", "value", "props"))
 
 
-def _run_stream_to_table(spark, out, prefix: str, mode: str = "append",
-                         parts: str | None = None):
-    """availableNow → memory sink; returns the sink table DataFrame.
-    State-store partition count binds when the query STARTS
-    (``_STREAM_PARTS`` default — at gate/bench SF the plain driver
-    session's 200 is pure per-micro-batch scheduling overhead); the
-    session value is restored right after .start(). ``mode="complete"``
-    for built-in streaming aggregations (the memory sink holds the
-    latest full result); ``parts`` overrides for operators with heavier
-    per-partition state machinery (the stream-stream join)."""
-    import tempfile
-    import uuid
-
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts or _STREAM_PARTS)
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode(mode)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    spark.conf.set("spark.sql.shuffle.partitions", _old_parts)
-    _await_done(q, 300)
-    return spark.table(name)
-
-
 def _run_stream_update_latest(spark, agg, prefix: str,
                               key_cols: list[str]):
     """UPDATE-mode finalize for streaming aggregations: foreachBatch
-    appends only each micro-batch's UPDATED rows (stamped with the
-    batch id) to a temp parquet dir; the batch finalize keeps each
+    spills only each micro-batch's UPDATED rows (stamped with the
+    batch id, ``_run_stream_to_spill``); the batch finalize keeps each
     key's last emission — a per-KEY row_number window, never global.
     This is the production emission mode for unbounded key spaces:
     complete mode re-emits the ENTIRE aggregate every micro-batch
@@ -9809,21 +9640,11 @@ def _run_stream_update_latest(spark, agg, prefix: str,
     to keys actually touched per batch. The aggregation state itself
     is identical either way (one row per key in the state store) —
     only what crosses the sink changes."""
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix=f"{prefix}_upd_")
-    ckpt = tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
-    _old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
-    q = (agg.writeStream.outputMode("update")
-         .foreachBatch(
-             lambda b, bid: b.withColumn("_batch", F.lit(int(bid)))
-             .write.mode("append").parquet(out_dir))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    spark.conf.set("spark.sql.shuffle.partitions", _old_parts)
-    _await_done(q, 300)
-    sunk = spark.read.parquet(out_dir)
+    sunk, _q = _run_stream_to_spill(
+        spark, agg, f"{prefix}_upd",
+        StructType([*agg.schema.fields, StructField("_batch", LongType())]),
+        lambda b, bid: b.withColumn("_batch", F.lit(int(bid))),
+        mode="update")
     w = Window.partitionBy(*key_cols).orderBy(F.col("_batch").desc())
     return (sunk.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn", "_batch"))
@@ -9942,13 +9763,7 @@ def streaming_dedup_exact(spark, sf_dir):
     # probe the BATCH schema instead of hard-coding one: a silent
     # on-disk type change must not desync the stream read (the round-5
     # events lesson, applied to every external-table readStream)
-    raw = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .select("doc_id", "text")
-    )
+    raw = _table_stream(spark, sf_dir, "documents").select("doc_id", "text")
     planted = raw.filter(F.col("doc_id") < 50).select(
         (F.col("doc_id") + 20000).alias("doc_id"), "text")
     out = (
@@ -10255,11 +10070,8 @@ def join_bucketed_colocated(spark, sf_dir):
     The write-then-join here exists to exercise the path end-to-end
     at gate scale; a real deployment points `load()` at
     already-bucketed tables."""
-    import tempfile
-    import uuid
-
     tag = uuid.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix="bucketed_")
+    base = _scratch("bucketed_")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     o = load(spark, sf_dir, "orders").select("o_orderkey",
                                              "o_orderpriority")
@@ -10303,9 +10115,7 @@ def scan_partition_pruned(spark, sf_dir):
     ingests partitioned once and every daily query prunes forever.
     Results are hash-identical to the unpartitioned scan + filter
     (the oracle)."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="partitioned_")
+    base = _scratch("partitioned_")
     ev = load(spark, sf_dir, "events").select(
         F.floor(F.unix_micros("ts") / F.lit(86400000000.0))
         .cast("long").alias("day_idx"),
@@ -10513,9 +10323,7 @@ def scan_jsonl_permissive(spark, sf_dir):
     surface as a counted '_corrupt' bucket; at scale the same column
     routes them to a quarantine sink. Schema is DECLARED — schema
     inference over JSON is a full extra pass at 100 TB."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="jsonl_")
+    base = _scratch("jsonl_")
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "value")
     ev.write.json(f"{base}/in/good")
@@ -10562,9 +10370,7 @@ def scan_csv_permissive(spark, sf_dir):
     killing the job. Schema DECLARED, header off — inference over
     CSV costs a full extra pass at 100 TB and type-guesses; the
     corrupt-record column is the quarantine-sink hook."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="csvp_")
+    base = _scratch("csvp_")
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "value")
     ev.write.option("header", "false").csv(f"{base}/in/good")
@@ -10619,9 +10425,7 @@ def scan_schema_evolution(spark, sf_dir):
     planning time — keep it off hot paths by declaring the unified
     schema once the evolution settles; this entry demonstrates the
     transition window works."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="schevo_")
+    base = _scratch("schevo_")
     ev = load(spark, sf_dir, "events").select(
         "event_type",
         F.floor(F.unix_micros("ts") / F.lit(86400000000.0))
@@ -10664,9 +10468,7 @@ def scan_orc_roundtrip(spark, sf_dir):
     (spark.sql.orc.impl=native is the default); partitioning
     discipline transfers unchanged, so format choice is a
     compatibility decision, not a plan-shape one."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="orc_rt_")
+    base = _scratch("orc_rt_")
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "source", "text", "n_chars")
     docs.write.option("compression", "snappy").orc(f"{base}/docs")
@@ -12592,9 +12394,6 @@ def streaming_holt_linear(spark, sf_dir):
     arrives. Same 2-int state, same integer recurrence, same oracle
     as the batch twin — a forecaster you can leave running on the
     stream."""
-    import tempfile
-    import uuid
-
     from ..streaming import stateful
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -12606,7 +12405,7 @@ def streaming_holt_linear(spark, sf_dir):
                  _cents(F.col("value")).alias("_c"))
          .groupBy("event_type", "day_idx")
          .agg(F.sum("_c").alias("x")))
-    topic = tempfile.mkdtemp(prefix=f"holt_{uuid.uuid4().hex[:8]}_")
+    topic = _scratch("holt_topic_")
     d.write.mode("overwrite").parquet(topic)
     src = (spark.readStream.schema(
         "event_type string, day_idx long, x long").parquet(topic))
@@ -13482,14 +13281,11 @@ def streaming_khop_reach(spark, sf_dir):
     topic is Kafka, the per-hop joins stay partitioned on the node
     key, and memory is bounded by one batch's frontier, never the
     stream history."""
-    import os
-    import tempfile
-
     from .market import FileTopic
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     edges, seeds = _khop_graph(spark, sf_dir, parts=int(_STREAM_PARTS))
-    base = tempfile.mkdtemp(prefix="khop_stream_")
+    base = _scratch("khop_stream_")
     schema = "seed string, node string"
     topics = [os.path.join(base, "hop0")]
     seeds.select("seed", F.col("seed").alias("node")).coalesce(1) \
@@ -13502,11 +13298,6 @@ def streaming_khop_reach(spark, sf_dir):
         os.makedirs(topic.path, exist_ok=True)
         hop_topics.append(topic)
         topics.append(topic.path)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # _STREAM_PARTS (not a pinned 16, r17): fewer state-store
-    # instances measured faster and the knob stays env-tunable like
-    # every other streaming entry
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
 
     def _expand_batch(bdf, _id):
         # batch-local BFS over this micro-batch's seeds (disjoint
@@ -13530,14 +13321,16 @@ def streaming_khop_reach(spark, sf_dir):
             for df in persisted:
                 df.unpersist()
 
-    try:
+    ckpt = _scratch("khop_ckpt_")
+    # _STREAM_PARTS (not a pinned 16, r17): fewer state-store
+    # instances measured faster, like every other streaming entry
+    with _stream_partitions(spark):
         q = (spark.readStream.schema(schema).json(topics[0])
              .writeStream.foreachBatch(_expand_batch)
-             .option("checkpointLocation", os.path.join(base, "ck"))
+             .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
         _await_done(q, 300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    shutil.rmtree(ckpt, ignore_errors=True)
     per_hop = [
         spark.read.schema(schema).json(t)
         .select("seed", F.lit(h).cast("long").alias("hop"))
@@ -13591,23 +13384,18 @@ def streaming_label_propagation(spark, sf_dir):
     per-stage join stays partitioned on the node key, and the partial
     counts crossing the sink are bounded by distinct (node, lbl)
     pairs per batch — never event volume."""
-    import os
-    import tempfile
-
     from .market import FileTopic
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     edges, _seeds = _khop_graph(spark, sf_dir, parts=int(_STREAM_PARTS))
-    base = tempfile.mkdtemp(prefix="lpa_stream_")
+    base = _scratch("lpa_stream_")
     schema = "node string, lbl string"
     cur = os.path.join(base, "r0")
     (edges.select("src").distinct()
      .select(F.col("src").alias("node"), F.col("src").alias("lbl"))
      .coalesce(1).write.mode("overwrite").json(cur))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # _STREAM_PARTS for the same reason as streaming_khop_reach (r17)
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTS)
-    try:
+    with _stream_partitions(spark):
         for it in range(1, _LPA_ITERS + 1):
             frontier = spark.readStream.schema(schema).json(cur)
             votes = (frontier.join(edges,
@@ -13625,11 +13413,12 @@ def streaming_label_propagation(spark, sf_dir):
                     bdf.groupBy("node", "lbl").agg(
                         F.count(F.lit(1)).alias("cnt")))
 
+            ckpt = _scratch("lpa_ckpt_")
             q = (votes.writeStream.foreachBatch(_partial_counts)
-                 .option("checkpointLocation", os.path.join(base,
-                                                            f"ck{it}"))
+                 .option("checkpointLocation", ckpt)
                  .trigger(availableNow=True).start())
             _await_done(q, 300)
+            shutil.rmtree(ckpt, ignore_errors=True)
             nxt = os.path.join(base, f"r{it}")
             (spark.read.schema(topic.schema).json(topic.path)
              .groupBy("node", "lbl").agg(F.sum("cnt").alias("cnt"))
@@ -13639,8 +13428,6 @@ def streaming_label_propagation(spark, sf_dir):
                                  F.col("lbl").alias("lb"))).alias("lbl"))
              .coalesce(1).write.mode("overwrite").json(nxt))
             cur = nxt
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     labels = spark.read.schema(schema).json(cur)
     return _lpa_top_communities(labels)
 

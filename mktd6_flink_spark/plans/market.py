@@ -184,28 +184,3 @@ def accepted_investments(txns: DataFrame) -> DataFrame:
     return txns.filter(
         stateless.accepted_only(F.col("status"))
         & (F.col("type") == "INVEST"))
-
-
-def delayed_returns(investment_txns: DataFrame, compute_return,
-                    delay_ms: int = 500) -> DataFrame:
-    """ST8 (MarketDataflow.java:348-392): per-txn processing-time timer
-    emitting the RETURN updater (coinsDiff = return, investDiff = -1),
-    which the caller appends back onto the trader-state-updates topic —
-    the reference's feedback edge."""
-    src = investment_txns.select(
-        "txnId", "trader",
-        F.abs(F.col("coins")).alias("invested"),
-        F.lit(delay_ms).cast("long").alias("delay_ms"))
-    return stateful.delayed_return_stream(
-        src,
-        "txnId string, trader string, type string, coinsDiff double, "
-        "investDiff int",
-        compute_return)
-
-
-def accepted_states(txns: DataFrame) -> DataFrame:
-    """MarketDataflow.java:174-180: accepted TxnResults → trader-states
-    (dashboard input)."""
-    return txns.filter(stateless.accepted_only(F.col("status"))).select(
-        "trader", "coins", "shares", "bailouts", "fedMonkeys",
-        "inFlightInvestments")

@@ -19,11 +19,11 @@ the file-dir topics here are the broker-less stand-in.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import stateless
-from ..streaming import sources, stateful
+from ..streaming import stateful
 
 
 def hype_pipeline_step(alpha_scale: float = 0.01):
@@ -88,21 +88,3 @@ def stage2_share_price(hype_diff: DataFrame,
         "hype double, ema double, seen boolean",
         lambda s: (float(s[0]), float(s[1]), bool(s[2])),
         lambda r: (r[0], r[1], r[2]))
-
-
-def base_price_stream(spark: SparkSession, seed: int | None = None,
-                      rows_per_second: int = 1) -> DataFrame:
-    """Branch A: log-normal generator → constant key → ST2 running
-    product (the simulated base price)."""
-    mults = sources.log_normal_mult_source(
-        spark, rows_per_second=rows_per_second, seed=seed)
-    keyed = mults.select(
-        stateless.constant_key().alias("key"),
-        F.unix_millis("time").alias("seq"),
-        F.col("mult"),
-    )
-    return stateful.apply_per_event_stream(
-        keyed, ["key"], ["seq"], stateful.product_step,
-        "key string, price_mult double", "acc double",
-        stateful.pack1, stateful.unpack1).withColumnRenamed(
-            "price_mult", "price")

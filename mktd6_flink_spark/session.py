@@ -52,26 +52,3 @@ def get_spark(app_name: str = "mktd6-spark", extra_conf: dict | None = None) -> 
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Load the driver's parquet tables as a dict of DataFrames and register
-    them as temp views (mirrors the DuckDB-oracle registration)."""
-    names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    out = {}
-    for n in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out

@@ -3,9 +3,11 @@
 S1/K1 Kafka: the container has no Kafka broker, so these builders
 construct the correct streaming plans (readStream/writeStream format
 "kafka" + the TopicDef JSON codecs) but are exercised only up to plan
-construction in tests. S2 synthetic generator, S4 in-memory elements and
-K3 console are fully runnable; the file/memory pair is the test harness
-replacement for embedded Kafka (SURVEY.md §5).
+construction in tests. The S2 synthetic generator is fully runnable; S4
+in-memory elements is plain ``spark.createDataFrame`` and K3 console is
+``writeStream.format("console")``, so neither needs a wrapper here. The
+file/memory pair is the test harness replacement for embedded Kafka
+(SURVEY.md §5).
 """
 
 from __future__ import annotations
@@ -85,18 +87,6 @@ def log_normal_mult_source(spark: SparkSession, rows_per_second: int = 1,
     )
 
 
-def from_elements(spark: SparkSession, rows: list, schema) -> DataFrame:
-    """S4 — one-shot in-memory elements source
-    (MonkeyStockChampion.java:96-101): a bounded bootstrap record set;
-    in Spark a plain batch createDataFrame written once to the sink."""
-    return spark.createDataFrame(rows, schema)
-
-
-def console_sink(df: DataFrame, mode: str = "append"):
-    """K3 — debug console sink (Dashboard.java:73)."""
-    return df.writeStream.format("console").outputMode(mode)
-
-
 def file_stream_source(spark: SparkSession, path: str, schema) -> DataFrame:
     """Test-harness source: stream JSON files from a directory — the
     embedded-Kafka replacement for golden tests (SURVEY.md §5). Write
@@ -142,21 +132,3 @@ def dashboard_sink(df: DataFrame, out_dir: str, checkpoint: str):
         .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
     )
-
-
-def tweet_stream_to_gibbs(raw_tweets: DataFrame,
-                          json_col: str = "value") -> DataFrame:
-    """S3 — the Twitter firehose ingest (Gibber.java:86-174): parse raw
-    tweet JSON, require id_str/text, keep (?i)banana tweets, emit Gibb
-    rows. The network client itself is out of scope (no twitter lib /
-    credentials here; in the reference it's hosebird + trackTerms) —
-    feed this from any stream of raw tweet JSON (Kafka, file, socket).
-    """
-    from ..operators.stateless import extract_tweet
-
-    parsed = raw_tweets.select(
-        extract_tweet(F.col(json_col)).alias("t"),
-        F.current_timestamp().alias("time"),
-    )
-    return parsed.filter(F.col("t").isNotNull()).select(
-        F.col("t.id").alias("id"), "time", F.col("t.text").alias("text"))

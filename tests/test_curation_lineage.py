@@ -44,3 +44,28 @@ def test_curation_lineage_funnel(spark):
     # and the registered gate entry is the same plan minus the audit
     gate_rows = dq.QUERIES["pipeline_curation"](spark, REAL_SF).count()
     assert gate_rows == n_final
+
+
+@needs_testdata
+def test_curation_gate_failure_raises(spark, monkeypatch):
+    """The quality and lang-id gates materialize on a side thread that
+    overlaps the CC ladder. A failure there must raise from the entry
+    call itself once the overlap ends, not only print to stderr and
+    leave a lazy frame that fails later (or never, if unread)."""
+    from pyspark.sql import functions as F
+
+    from mktd6_flink_spark.functions import text as tx
+    from mktd6_flink_spark.operators import cache
+
+    def failing_quality(df, *args, **kwargs):
+        return df.select(
+            "doc_id",
+            F.raise_error(F.lit("forced gate failure")).alias(
+                "quality_score"))
+
+    monkeypatch.setattr(tx, "quality_stats", failing_quality)
+    try:
+        with pytest.raises(Exception, match="forced gate failure"):
+            dq.QUERIES["pipeline_curation"](spark, REAL_SF)
+    finally:
+        cache.release_twophase_caches()

@@ -370,10 +370,13 @@ def test_st8_timer_survives_restart(spark, tmp_path):
                 .option("checkpointLocation", ckpt)
                 .trigger(processingTime="200 milliseconds").start())
 
-    # run 1: ingest the investment (registers a 1500 ms timeout), stop
-    # before it can fire
+    # run 1: ingest the investment (registers a 10 s timeout), stop
+    # before it can fire. The timeout must outlast batch 0 by a wide
+    # margin: a batch that starts after the expiry fires the timer
+    # INSIDE run 1, and batch 0 alone has taken 2.4-6.8 s on a 4-vCPU
+    # VM (a 1.5 s timeout failed a full-suite run that way)
     sources.write_stream_input(
-        spark, in_dir, [("txnR", "t1", 5.0, 1500)], schema)
+        spark, in_dir, [("txnR", "t1", 5.0, 10000)], schema)
     q1 = start(1)
     deadline = time.time() + 120
     while time.time() < deadline:   # wait until batch 0 committed
@@ -383,7 +386,7 @@ def test_st8_timer_survives_restart(spark, tmp_path):
     q1.stop()
     q1.awaitTermination(60)
 
-    time.sleep(2.0)                 # let the expiry pass while DOWN
+    time.sleep(10.5)                # let the expiry pass while DOWN
 
     # run 2: fresh query, same checkpoint; heartbeat files drive batches
     q2 = start(2)
