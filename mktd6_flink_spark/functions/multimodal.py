@@ -32,12 +32,18 @@ mapInPandas does here.
 
 from __future__ import annotations
 
+import re
+import struct
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from .hashing import round_portable
+from .jpeg import encode_dc_jpeg
+from .jpeg_progressive import encode_dc_jpeg_progressive
+from .png import encode_png_gray
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -2055,6 +2061,21 @@ def _fanout_docs(docs: DataFrame) -> DataFrame:
         docs.sparkSession.sparkContext.defaultParallelism)
 
 
+# the raster builders' text clean ([a-z0-9 ], lowercased), in lockstep
+# with every raster oracle
+_CLEAN_RE = re.compile(r"[^a-z0-9 ]+")
+
+
+def _text_grid(clean: str, width: int) -> "np.ndarray":
+    """Cap cleaned text at RASTER_MAX_CHARS and zero-pad it into a
+    [rows, width] uint8 grid of at least one row."""
+    clean = clean[:RASTER_MAX_CHARS]
+    n = len(clean)
+    raster = np.zeros(max(-(-n // width), 1) * width, dtype=np.uint8)
+    raster[:n] = np.frombuffer(clean.encode("ascii"), dtype=np.uint8)
+    return raster.reshape(-1, width)
+
+
 def _raster_media_from_documents(docs: DataFrame, width: int,
                                  encode_fn,
                                  with_id: bool = False) -> DataFrame:
@@ -2075,24 +2096,14 @@ def _raster_media_from_documents(docs: DataFrame, width: int,
     decode-path cost (a real ingest arrives already partitioned)."""
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import re
-
-        import numpy as np
         import pandas as pd
 
-        strip = re.compile(r"[^a-z0-9 ]+")
         for pdf in it:
             out = []
             for did, text in zip(pdf["doc_id"].to_list(),
                                  pdf["text"].to_list()):
-                clean = strip.sub("", (text or "").lower())
-                clean = clean[:RASTER_MAX_CHARS]
-                n = len(clean)
-                h = max(-(-n // width), 1)
-                raster = np.zeros(h * width, dtype=np.uint8)
-                raster[:n] = np.frombuffer(
-                    clean.encode("ascii"), dtype=np.uint8)
-                grid = raster.reshape(h, width)
+                grid = _text_grid(_CLEAN_RE.sub("", (text or "").lower()),
+                                  width)
                 payload = (encode_fn(grid, did) if with_id
                            else encode_fn(grid))
                 out.append((did, bytearray(payload)))
@@ -3287,30 +3298,11 @@ def _attrition_payloads(did: int, text: str | None) -> list:
     via the shared raster clean/cap/pad contract, WAV u8 (even) /
     16-bit (odd) via the audio builders' uncapped clean. Returns
     [(modality, payload_bytes), ...]."""
-    import re
-    import struct
-
-    import numpy as np
-
-    from .jpeg import encode_dc_jpeg
-    from .jpeg_progressive import encode_dc_jpeg_progressive
-    from .png import encode_png_gray
-
-    strip = re.compile(r"[^a-z0-9 ]+")
-    clean = strip.sub("", (text or "").lower())
-
-    def grid(width):
-        c = clean[:RASTER_MAX_CHARS]
-        n = len(c)
-        h = max(-(-n // width), 1)
-        raster = np.zeros(h * width, dtype=np.uint8)
-        raster[:n] = np.frombuffer(c.encode("ascii"), dtype=np.uint8)
-        return raster.reshape(h, width)
-
+    clean = _CLEAN_RE.sub("", (text or "").lower())
     jpeg_enc = (encode_dc_jpeg if did % 2 == 0
                 else encode_dc_jpeg_progressive)
-    out = [("image_jpeg", bytes(jpeg_enc(grid(JPEG_BLOCKS_W)))),
-           ("image_png", bytes(encode_png_gray(grid(PGM_WIDTH))))]
+    out = [("image_jpeg", bytes(jpeg_enc(_text_grid(clean, JPEG_BLOCKS_W)))),
+           ("image_png", bytes(encode_png_gray(_text_grid(clean, PGM_WIDTH))))]
     if did % 2 == 0:
         # u8 RIFF/WAVE — the Column-expression builder's exact bytes:
         # data = cleaned codepoints padded to >= 1 sample with NUL

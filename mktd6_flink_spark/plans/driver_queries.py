@@ -160,8 +160,8 @@ def _run_stream_to_table(spark, out, prefix: str, mode: str = "append",
     machinery (the stream-stream join). ``until_rows`` is for timer
     entries whose output arrives on no-data micro-batches after the
     source drains: the query runs on a 200 ms processing-time trigger
-    until the sink holds that many rows (or 180 s pass), then stops —
-    the caller checks the final count."""
+    until the sink holds that many rows (or 180 s pass), then stops
+    between two micro-batches — the caller checks the final count."""
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
     ckpt = _scratch(f"{prefix}_ckpt_")
     writer = sources.memory_sink(out, name, ckpt).outputMode(mode)
@@ -177,10 +177,15 @@ def _run_stream_to_table(spark, out, prefix: str, mode: str = "append",
     deadline = time.time() + 180
     while time.time() < deadline and spark.table(name).count() < until_rows:
         time.sleep(0.5)
+    # stop between micro-batches: a stop inside one cancels its
+    # state-store commit. A trigger can still start between the status
+    # read and the stop, and its aborting tasks write into the
+    # checkpoint, so it stays until the exit hook
+    idle_by = time.time() + 30
+    while q.status["isTriggerActive"] and time.time() < idle_by:
+        time.sleep(0.01)
     q.stop()
     _await_done(q, 60)
-    # the stop cancels any micro-batch in flight, and its tasks may still
-    # be aborting into the checkpoint: it stays until the exit hook
     return spark.table(name)
 
 
@@ -249,6 +254,29 @@ def register(name: str, sql: str | None = None):
             ORACLES[name] = expand_round6(sql)
         return fn
     return deco
+
+
+def _stream_twin(name: str, batch_name: str,
+                 pipeline: Callable[[DataFrame], DataFrame],
+                 sink=_run_stream_to_table) -> None:
+    """Register ``name`` as the decode-on-ingest twin of the documents
+    entry ``batch_name``: the batch entry's own ``pipeline`` (documents
+    -> DataFrame) over a readStream of the documents table, drained by
+    ``sink(spark, out, prefix)`` and graded against the batch oracle.
+    The pipelines are stateless per row (an aggregate, if any, finalizes
+    in the sink), so append mode needs no watermark and the rows equal
+    the batch twin's under any micro-batching."""
+    def twin(spark, sf_dir):
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        docs = _table_stream(spark, sf_dir, "documents")
+        return sink(spark, pipeline(docs), name)
+
+    twin.__name__ = twin.__qualname__ = name
+    twin.__doc__ = (
+        f"The {batch_name} pipeline on ingest through the LIVE streaming "
+        "runtime. Documents arrive on a readStream of the documents "
+        f"table, and the result is graded against {batch_name}'s oracle.")
+    register(name, ORACLES[batch_name])(twin)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -1860,22 +1888,7 @@ def text_dup_ngram_fraction(spark, sf_dir):
     return tx.dup_ngram_fraction(load(spark, sf_dir, "documents"))
 
 
-@register("streaming_gopher_rules", tx.sql_gopher_rules())
-def streaming_gopher_rules(spark, sf_dir):
-    """The Gopher rule panel ON INGEST through the LIVE streaming
-    runtime — the quality gate a training-data pipeline applies as
-    documents arrive, not after the corpus lands. The panel is pure
-    map-side Column expressions (one F.aggregate tokenizer fold, all
-    thresholds integer cross-multiplied), so the stream plan is
-    stateless — no state store, no watermark, no shuffle — and the
-    result is row-identical to the batch twin text_gopher_rules under
-    the same oracle. Schema is probed from the batch read (round-5
-    events lesson: never hard-code an external table's stream
-    schema)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    out = tx.gopher_rules(raw)
-    return _run_stream_to_table(spark, out, "gopher_stream")
+_stream_twin("streaming_gopher_rules", "text_gopher_rules", tx.gopher_rules)
 
 
 @register("text_length_log2_histogram", f"""
@@ -2181,6 +2194,10 @@ def mm_decode_pgm(spark, sf_dir):
     return mm.decode_pgm(mm.pgm_media_from_documents(docs))
 
 
+def _jpeg_features(docs):
+    return mm.decode_jpeg(mm.jpeg_media_from_documents(docs))
+
+
 @register("mm_decode_jpeg", mm.sql_decode_jpeg("documents"))
 def mm_decode_jpeg(spark, sf_dir):
     """REAL compressed-codec decode — baseline JPEG in pure numpy, no
@@ -2202,8 +2219,7 @@ def mm_decode_jpeg(spark, sf_dir):
     the progressive (SOF2) sibling entry (MP4 / FLAC remain honestly
     out of scope). Malformed
     payloads drop per row; payloads never shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    return mm.decode_jpeg(mm.jpeg_media_from_documents(docs))
+    return _jpeg_features(load(spark, sf_dir, "documents"))
 
 
 @register("mm_decode_jpeg_progressive", mm.sql_decode_jpeg("documents"))
@@ -2249,6 +2265,10 @@ def mm_resize_pgm(spark, sf_dir):
     return mm.resize_pgm(mm.pgm_media_from_documents(docs))
 
 
+def _pgm_frame_sample(docs):
+    return mm.frame_sample_pgm(mm.pgm_stream_from_documents(docs))
+
+
 @register("mm_frame_sample", mm.sql_frame_sample("documents"))
 def mm_frame_sample(spark, sf_dir):
     """REAL video frame sampling — the path mm_frame_plan only planned:
@@ -2267,27 +2287,10 @@ def mm_frame_sample(spark, sf_dir):
     bug (off-by-one across a frame boundary) breaks the hash.
     See functions/multimodal.py:pgm_stream_from_documents/
     frame_sample_pgm."""
-    docs = load(spark, sf_dir, "documents")
-    return mm.frame_sample_pgm(mm.pgm_stream_from_documents(docs))
+    return _pgm_frame_sample(load(spark, sf_dir, "documents"))
 
 
-@register("streaming_frame_sample", mm.sql_frame_sample("documents"))
-def streaming_frame_sample(spark, sf_dir):
-    """DECODE-ON-INGEST through the LIVE streaming runtime: the same
-    encode -> frame-walk -> sample pipeline as mm_frame_sample, but
-    running as a Structured Streaming query (readStream -> Column-expr
-    encode -> mapInPandas frame walk -> append sink) — the shape a
-    100 TB multimodal ingest actually has, where media is feature-
-    extracted as it ARRIVES rather than in a corpus-at-rest pass.
-    Stateless per row, so append mode needs no watermark and the
-    result equals the batch twin under ANY micro-batching; graded
-    against the SAME oracle. Payloads never shuffle (mapInPandas on
-    the source partitioning); malformed streams drop per row on the
-    hot path exactly as in batch."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    out = mm.frame_sample_pgm(mm.pgm_stream_from_documents(raw))
-    return _run_stream_to_table(spark, out, "mm_ingest")
+_stream_twin("streaming_frame_sample", "mm_frame_sample", _pgm_frame_sample)
 
 
 @register("mm_decode_png",
@@ -2309,6 +2312,10 @@ def mm_decode_png(spark, sf_dir):
     return mm.decode_png(mm.png_media_from_documents(docs))
 
 
+def _png_rgb_features(docs):
+    return mm.decode_png_rgb_features(mm.png_rgb_media_from_documents(docs))
+
+
 @register("mm_decode_png_rgb",
           mm.sql_decode_png_rgb("documents", cap=mm.RASTER_MAX_CHARS))
 def mm_decode_png_rgb(spark, sf_dir):
@@ -2325,9 +2332,7 @@ def mm_decode_png_rgb(spark, sf_dir):
     channel-interleave bug flips the hash. Malformed payloads drop
     per row; payloads never shuffle (mapInPandas on the builder's
     partitioning)."""
-    docs = load(spark, sf_dir, "documents")
-    return mm.decode_png_rgb_features(
-        mm.png_rgb_media_from_documents(docs))
+    return _png_rgb_features(load(spark, sf_dir, "documents"))
 
 
 @register("mm_decode_png_palette",
@@ -2401,6 +2406,11 @@ def mm_decode_png_rgba(spark, sf_dir):
         mm.png_rgba_media_from_documents(docs))
 
 
+def _gif_features(docs):
+    return mm._rgb_png_features(mm.gif_media_from_documents(docs),
+                                "decode_gif_rgb", module="gif")
+
+
 @register("mm_decode_gif",
           mm.sql_decode_png_rgb("documents", cap=mm.RASTER_MAX_CHARS))
 def mm_decode_gif(spark, sf_dir):
@@ -2421,9 +2431,11 @@ def mm_decode_gif(spark, sf_dir):
     Cross-validated against an independent clear-code-per-symbol LZW
     encoder in tests/test_gif.py. Malformed payloads drop per row;
     payloads never shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    return mm._rgb_png_features(mm.gif_media_from_documents(docs),
-                                "decode_gif_rgb", module="gif")
+    return _gif_features(load(spark, sf_dir, "documents"))
+
+
+def _gif_frame_sample(docs):
+    return mm.gif_frame_sample(mm.gif_anim_media_from_documents(docs))
 
 
 @register("mm_gif_frame_sample", mm.sql_frame_sample("documents"))
@@ -2440,26 +2452,15 @@ def mm_gif_frame_sample(spark, sf_dir):
     skip, now on a compressed container). A cursor bug, an LZW bug, or
     a GCE mis-walk flips the hash. Malformed streams drop per row;
     payloads never shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    return mm.gif_frame_sample(mm.gif_anim_media_from_documents(docs))
+    return _gif_frame_sample(load(spark, sf_dir, "documents"))
 
 
-@register("streaming_gif_frame_sample", mm.sql_frame_sample("documents"))
-def streaming_gif_frame_sample(spark, sf_dir):
-    """ANIMATED-GIF frame sampling ON-INGEST (round 16): the
-    mm_gif_frame_sample pipeline (animated-GIF encode → block walk →
-    sparse LZW decode of every 2nd frame) as a LIVE Structured
-    Streaming query — sampled-frame feature extraction at arrival
-    time, with unsampled frames skipping the entropy coder exactly as
-    in batch. Stateless per row, so append mode needs no watermark and
-    the result equals the batch twin under ANY micro-batching; graded
-    against the SAME shared oracle (sql_frame_sample — now pinning
-    FOUR paths: P5 batch+streaming, GIF batch+streaming). Payloads
-    never shuffle; malformed streams drop per row."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    out = mm.gif_frame_sample(mm.gif_anim_media_from_documents(raw))
-    return _run_stream_to_table(spark, out, "mm_gif_anim_ingest")
+_stream_twin("streaming_gif_frame_sample", "mm_gif_frame_sample",
+             _gif_frame_sample)
+
+
+def _gif_frame_composite(docs):
+    return mm.gif_frame_composite(mm.gif_anim_delta_media_from_documents(docs))
 
 
 @register("mm_gif_frame_composite", mm.sql_frame_sample("documents"))
@@ -2484,28 +2485,11 @@ def mm_gif_frame_composite(spark, sf_dir):
     documented honesty note); only the UNDEFINED disposal codes 4-7
     raise into the attrition taxonomy rather than decoding wrongly.
     Malformed streams drop per row; payloads never shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    return mm.gif_frame_composite(
-        mm.gif_anim_delta_media_from_documents(docs))
+    return _gif_frame_composite(load(spark, sf_dir, "documents"))
 
 
-@register("streaming_gif_frame_composite",
-          mm.sql_frame_sample("documents"))
-def streaming_gif_frame_composite(spark, sf_dir):
-    """Composited animated-GIF playback ON-INGEST (round 17): the
-    mm_gif_frame_composite pipeline (delta encode → composited
-    partial-rect/disposal/LCT playback → sampled canvas means) as a
-    LIVE Structured Streaming query. Stateless per row (compositing
-    state lives WITHIN one payload's decode, never across rows), so
-    append mode needs no watermark and the result equals the batch
-    twin under ANY micro-batching; graded against the SAME shared
-    oracle (sql_frame_sample — five paths pinned by one SQL twin).
-    Payloads never shuffle; malformed streams drop per row."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    out = mm.gif_frame_composite(
-        mm.gif_anim_delta_media_from_documents(raw))
-    return _run_stream_to_table(spark, out, "mm_gif_delta_ingest")
+_stream_twin("streaming_gif_frame_composite", "mm_gif_frame_composite",
+             _gif_frame_composite)
 
 
 @register("mm_decode_png_pal_trns",
@@ -2551,57 +2535,19 @@ def mm_decode_png_wide(spark, sf_dir):
         mm.png_gray16_media_from_documents(docs))
 
 
-@register("streaming_decode_jpeg", mm.sql_decode_jpeg("documents"))
-def streaming_decode_jpeg(spark, sf_dir):
-    """Compressed-codec DECODE-ON-INGEST through the LIVE streaming
-    runtime: the same JPEG encode -> full-T.81 decode -> band-feature
-    pipeline as mm_decode_jpeg, but as a Structured Streaming query
-    (readStream -> mapInPandas encode -> mapInPandas decode -> append
-    sink) — a 100 TB multimodal ingest feature-extracts compressed
-    media as it ARRIVES. Stateless per row, so append mode needs no
-    watermark and the result equals the batch twin under ANY
-    micro-batching; graded against the SAME oracle. Payloads never
-    shuffle; malformed blobs drop per row on the hot path."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    out = mm.decode_jpeg(mm.jpeg_media_from_documents(raw))
-    return _run_stream_to_table(spark, out, "mm_jpeg_ingest")
+_stream_twin("streaming_decode_jpeg", "mm_decode_jpeg", _jpeg_features)
 
 
-@register("streaming_decode_png_rgb",
-          mm.sql_decode_png_rgb("documents", cap=mm.RASTER_MAX_CHARS))
-def streaming_decode_png_rgb(spark, sf_dir):
-    """TRUECOLOR decode-on-ingest (round 14): the RGB PNG encode ->
-    CRC/inflate/filter decode -> per-channel band-feature pipeline of
-    mm_decode_png_rgb as a LIVE Structured Streaming query — the
-    common-case codec (real PNGs are overwhelmingly color type 2) in
-    the production ingest shape. Stateless per row (mapInPandas on
-    the source partitioning), so append mode needs no watermark and
-    the result equals the batch twin under ANY micro-batching; graded
-    against the SAME oracle. Payloads never shuffle; malformed blobs
-    drop per row."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    out = mm.decode_png_rgb_features(mm.png_rgb_media_from_documents(raw))
-    return _run_stream_to_table(spark, out, "mm_png_rgb_ingest")
+_stream_twin("streaming_decode_png_rgb", "mm_decode_png_rgb",
+             _png_rgb_features)
 
 
-@register("streaming_decode_gif",
-          mm.sql_decode_png_rgb("documents", cap=mm.RASTER_MAX_CHARS))
-def streaming_decode_gif(spark, sf_dir):
-    """GIF decode-on-ingest (round 16): the GIF encode → block-walk/
-    LZW decode → per-channel band-feature pipeline of mm_decode_gif
-    as a LIVE Structured Streaming query — the new compression
-    algorithm in the production ingest shape. Stateless per row
-    (mapInPandas on the source partitioning), so append mode needs no
-    watermark and the result equals the batch twin under ANY
-    micro-batching; graded against the SAME shared oracle. Payloads
-    never shuffle; malformed blobs drop per row."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    out = mm._rgb_png_features(mm.gif_media_from_documents(raw),
-                               "decode_gif_rgb", module="gif")
-    return _run_stream_to_table(spark, out, "mm_gif_ingest")
+_stream_twin("streaming_decode_gif", "mm_decode_gif", _gif_features)
+
+
+def _bmp_features(docs):
+    return mm._rgb_png_features(mm.bmp_media_from_documents(docs),
+                                "decode_bmp_rgb", module="bmp")
 
 
 @register("mm_decode_bmp",
@@ -2622,27 +2568,15 @@ def mm_decode_bmp(spark, sf_dir):
     sql_decode_png_rgb now pins FOUR container families and a
     BGR-swap, stride, row-order, or RLE bug flips only this hash.
     Malformed payloads drop per row; payloads never shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    return mm._rgb_png_features(mm.bmp_media_from_documents(docs),
-                                "decode_bmp_rgb", module="bmp")
+    return _bmp_features(load(spark, sf_dir, "documents"))
 
 
-@register("streaming_decode_bmp",
-          mm.sql_decode_png_rgb("documents", cap=mm.RASTER_MAX_CHARS))
-def streaming_decode_bmp(spark, sf_dir):
-    """BMP decode-on-ingest (round 17 late addition): the
-    mm_decode_bmp pipeline (three-profile BMP encode → header walk /
-    RLE8 expand → per-channel band features) as a LIVE Structured
-    Streaming query. Stateless per row (mapInPandas on the source
-    partitioning), so append mode needs no watermark and the result
-    equals the batch twin under ANY micro-batching; graded against
-    the SAME shared oracle. Payloads never shuffle; malformed blobs
-    drop per row."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    out = mm._rgb_png_features(mm.bmp_media_from_documents(raw),
-                               "decode_bmp_rgb", module="bmp")
-    return _run_stream_to_table(spark, out, "mm_bmp_ingest")
+_stream_twin("streaming_decode_bmp", "mm_decode_bmp", _bmp_features)
+
+
+def _ico_features(docs):
+    return mm._rgb_png_features(mm.ico_media_from_documents(docs),
+                                "decode_ico_rgb", module="ico")
 
 
 @register("mm_decode_ico",
@@ -2668,27 +2602,14 @@ def mm_decode_ico(spark, sf_dir):
     container families, and a dispatch, selection, doubled-height,
     mask, or palette bug flips only this hash. Malformed payloads
     drop per row; payloads never shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    return mm._rgb_png_features(mm.ico_media_from_documents(docs),
-                                "decode_ico_rgb", module="ico")
+    return _ico_features(load(spark, sf_dir, "documents"))
 
 
-@register("streaming_decode_ico",
-          mm.sql_decode_png_rgb("documents", cap=mm.ICO_MAX_CHARS))
-def streaming_decode_ico(spark, sf_dir):
-    """ICO decode-on-ingest (round 17 late addition): the
-    mm_decode_ico pipeline (directory-shaped encode → largest-image
-    selection → PNG/DIB dispatch → per-channel band features) as a
-    LIVE Structured Streaming query. Stateless per row (mapInPandas
-    on the source partitioning), so append mode needs no watermark
-    and the result equals the batch twin under ANY micro-batching;
-    graded against the SAME shared oracle. Payloads never shuffle;
-    malformed blobs drop per row."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    out = mm._rgb_png_features(mm.ico_media_from_documents(raw),
-                               "decode_ico_rgb", module="ico")
-    return _run_stream_to_table(spark, out, "mm_ico_ingest")
+_stream_twin("streaming_decode_ico", "mm_decode_ico", _ico_features)
+
+
+def _flac_features(docs):
+    return mm.decode_flac(mm.flac_media_from_documents(docs))
 
 
 @register("mm_decode_flac", mm.sql_decode_wav("documents"))
@@ -2712,24 +2633,15 @@ def mm_decode_flac(spark, sf_dir):
     sql_decode_wav pins a THIRD audio container and a bit-packing,
     rice, predictor, CRC, or UTF-8-coding bug flips only this hash.
     Malformed payloads drop per row; payloads never shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    return mm.decode_flac(mm.flac_media_from_documents(docs))
+    return _flac_features(load(spark, sf_dir, "documents"))
 
 
-@register("streaming_decode_flac", mm.sql_decode_wav("documents"))
-def streaming_decode_flac(spark, sf_dir):
-    """FLAC decode-on-ingest (round 17 late addition): the
-    mm_decode_flac pipeline (frame walk → rice/fixed-predictor
-    reconstruction → CRC/MD5 verify → clip features) as a LIVE
-    Structured Streaming query. Stateless per row (mapInPandas on
-    the source partitioning), so append mode needs no watermark and
-    the result equals the batch twin under ANY micro-batching;
-    graded against the SAME shared oracle. Payloads never shuffle;
-    malformed blobs drop per row."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    out = mm.decode_flac(mm.flac_media_from_documents(raw))
-    return _run_stream_to_table(spark, out, "mm_flac_ingest")
+_stream_twin("streaming_decode_flac", "mm_decode_flac", _flac_features)
+
+
+def _tiff_features(docs):
+    return mm._gray_features(mm.tiff_media_from_documents(docs),
+                             "decode_tiff_gray", module="tiff")
 
 
 @register("mm_decode_tiff",
@@ -2749,27 +2661,14 @@ def mm_decode_tiff(spark, sf_dir):
     sql_decode_pgm pins a third gray container and an endianness,
     inline-justification, strip, or PackBits bug flips only this
     hash. Malformed payloads drop per row; payloads never shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    return mm._gray_features(mm.tiff_media_from_documents(docs),
-                             "decode_tiff_gray", module="tiff")
+    return _tiff_features(load(spark, sf_dir, "documents"))
 
 
-@register("streaming_decode_tiff",
-          mm.sql_decode_pgm("documents", cap=mm.RASTER_MAX_CHARS))
-def streaming_decode_tiff(spark, sf_dir):
-    """TIFF decode-on-ingest (round 17 late addition): the
-    mm_decode_tiff pipeline (dual-endian encode → IFD walk / strip
-    reassembly / PackBits expand → band features) as a LIVE
-    Structured Streaming query. Stateless per row (mapInPandas on
-    the source partitioning), so append mode needs no watermark and
-    the result equals the batch twin under ANY micro-batching;
-    graded against the SAME shared oracle. Payloads never shuffle;
-    malformed blobs drop per row."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    out = mm._gray_features(mm.tiff_media_from_documents(raw),
-                            "decode_tiff_gray", module="tiff")
-    return _run_stream_to_table(spark, out, "mm_tiff_ingest")
+_stream_twin("streaming_decode_tiff", "mm_decode_tiff", _tiff_features)
+
+
+def _aiff_features(docs):
+    return mm.decode_aiff(mm.aiff_media_from_documents(docs))
 
 
 @register("mm_decode_aiff", mm.sql_decode_wav("documents"))
@@ -2788,24 +2687,10 @@ def mm_decode_aiff(spark, sf_dir):
     extended-float, offset, or pad-walk bug flips only this hash.
     Python stdlib ``aifc`` opens these payloads (asserted in tests).
     Malformed payloads drop per row; payloads never shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    return mm.decode_aiff(mm.aiff_media_from_documents(docs))
+    return _aiff_features(load(spark, sf_dir, "documents"))
 
 
-@register("streaming_decode_aiff", mm.sql_decode_wav("documents"))
-def streaming_decode_aiff(spark, sf_dir):
-    """AIFF decode-on-ingest (round 17 late addition): the
-    mm_decode_aiff pipeline (big-endian AIFF encode → IFF walk /
-    extended-float rate parse → clip features) as a LIVE Structured
-    Streaming query. Stateless per row (mapInPandas on the source
-    partitioning), so append mode needs no watermark and the result
-    equals the batch twin under ANY micro-batching; graded against
-    the SAME shared oracle. Payloads never shuffle; malformed blobs
-    drop per row."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    out = mm.decode_aiff(mm.aiff_media_from_documents(raw))
-    return _run_stream_to_table(spark, out, "mm_aiff_ingest")
+_stream_twin("streaming_decode_aiff", "mm_decode_aiff", _aiff_features)
 
 
 @register("mm_decode_wav", mm.sql_decode_wav("documents"))
@@ -2861,25 +2746,12 @@ def mm_decode_report(spark, sf_dir):
     return mm.attrition_report_from_documents(docs)
 
 
-@register("streaming_decode_report", mm.sql_decode_report("documents"))
-def streaming_decode_report(spark, sf_dir):
-    """Attrition-on-INGEST (round 15): the mm_decode_report pipeline —
-    three-modality corrupted corpus, real decode attempts, ValueError
-    reason classification — as a LIVE Structured Streaming query, the
-    shape a production ingest actually has: drop counters accumulate
-    as media ARRIVES, not in a corpus-at-rest pass. The builders,
-    corruptor, and classifier are all stateless mapInPandas /
-    Column-expression stages, so they lift onto readStream unchanged;
-    the (modality, reason) count is a bounded-cardinality (3 x 6 max)
-    streaming aggregation finalized in UPDATE mode (per-key latest —
-    the unbounded-key-safe emission). Graded against the SAME
-    arithmetic oracle as the batch twin. Payloads never shuffle;
-    state is one row per (modality, reason) pair."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = _table_stream(spark, sf_dir, "documents")
-    report = mm.attrition_report_from_documents(raw)
-    return _run_stream_update_latest(spark, report, "mm_attrition",
-                                     ["modality", "reason"])
+# the (modality, reason) count is a bounded streaming aggregation,
+# finalized in UPDATE mode (per-key latest)
+_stream_twin("streaming_decode_report", "mm_decode_report",
+             mm.attrition_report_from_documents,
+             sink=lambda spark, out, prefix: _run_stream_update_latest(
+                 spark, out, prefix, ["modality", "reason"]))
 
 
 @register("mm_decode_wav16", mm.sql_decode_wav("documents"))
@@ -8864,13 +8736,92 @@ def events_daily_ohlc(spark, sf_dir):
 # Round 3: timer mechanics and per-element coGroup through the LIVE runtime
 # ===========================================================================
 
-@register("streaming_st8_timer", f"""
+# Both ST8 timer clocks emit exactly the batch-precomputed RETURNs.
+_ST8_RETURNS_SQL = f"""
 WITH base AS ({ORACLES['st8_return_amounts']})
 SELECT concat('txn', event_id) AS txn_id, trader,
        'RETURN' AS utype, return_coins AS coins_diff,
        CAST(-1 AS INTEGER) AS invest_diff
 FROM base
-""")
+"""
+_ST8_EPOCH_MS = 1767225600000  # 2026-01-01T00:00:00Z
+
+
+def _st8_returns(spark, sf_dir, name: str, event_time: bool):
+    """The body both ST8 timer entries share: the oracle-checked batch
+    arithmetic (st8_return_amounts) stages each INVEST's return amount
+    and timer delay in a topic, and ``stateful.delayed_return_stream``
+    keys it by txnId and emits the RETURN updater when its timer fires
+    — on the processing-time clock, or on the event-time clock when
+    ``event_time`` is set. Timers fire on the micro-batches AFTER the
+    data drains, which are no-data batches, so that default-true conf
+    is pinned rather than assumed. A run that emits fewer RETURNs than
+    it staged raises instead of returning a partial result."""
+    from ..streaming import stateful
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
+                   "true")
+    base = st8_return_amounts(spark, sf_dir).select(  # raw fn, not the cache-releasing wrapper
+        F.concat(F.lit("txn"), F.col("event_id")).alias("txnId"),
+        "trader",
+        F.col("return_coins").alias("amount"),
+        # delays clamped to [1ms, 500ms] so the run stays fast and the
+        # timeout is positive; event time is a fixed epoch plus a
+        # per-txn sub-second offset. The emitted VALUES (what the
+        # oracle hashes) depend on neither.
+        F.greatest(F.least(F.col("delay_ms"), F.lit(500)), F.lit(1))
+        .cast("long").alias("delay_ms"),
+        F.timestamp_millis(
+            F.lit(_ST8_EPOCH_MS)
+            + F.pmod(F.col("event_id"), F.lit(1000))).alias("event_time"),
+    )
+    staged = base
+    if event_time:
+        # one heartbeat an hour past every possible timeout pushes the
+        # watermark over all of them; its own timer is parked ~12 days
+        # out so it never emits
+        staged = base.unionByName(spark.range(1).select(
+            F.lit("__wm_heartbeat__").alias("txnId"),
+            F.lit("hb").alias("trader"),
+            F.lit(0.0).alias("amount"),
+            F.lit(1_000_000_000).cast("long").alias("delay_ms"),
+            F.timestamp_millis(
+                F.lit(_ST8_EPOCH_MS + 3_600_000)).alias("event_time")))
+    topic = _scratch(f"{name}_topic_")
+    # the topic staging runs under the state-store count too
+    with _stream_partitions(spark):
+        expected = base.count()
+        staged.write.mode("overwrite").parquet(topic)
+
+    src = spark.readStream.schema(
+        "txnId string, trader string, amount double, delay_ms long, "
+        "event_time timestamp"
+    ).parquet(topic)
+    out = stateful.delayed_return_stream(
+        src,
+        "txnId string, trader string, type string, coinsDiff double, "
+        "investDiff int",
+        lambda row: row["amount"],
+        time_col="event_time" if event_time else None,
+    )
+    emitted = _run_stream_to_table(spark, out, f"{name}_stream",
+                                   until_rows=expected)
+    got = emitted.count()
+    if got < expected:
+        raise RuntimeError(
+            f"{name}: only {got}/{expected} timers fired within the "
+            "180 s deadline (check the trigger interval, the heartbeat "
+            "row and spark.sql.streaming.noDataMicroBatches.enabled)")
+    return emitted.select(
+        F.col("txnId").alias("txn_id"), "trader",
+        F.col("type").alias("utype"),
+        F.col("coinsDiff").alias("coins_diff"),
+        F.col("investDiff").alias("invest_diff"))
+
+
+@register("streaming_st8_timer", _ST8_RETURNS_SQL)
 def streaming_st8_timer(spark, sf_dir):
     """ST8's ProcessingTimeTimeout path through the LIVE streaming
     runtime (MarketDataflow.java:348-392): the oracle-checked batch
@@ -8883,140 +8834,27 @@ def streaming_st8_timer(spark, sf_dir):
     the mitigation for DIVERGENCES.md #4). The gate hashes the emitted
     RETURN updaters, so a timer that never fires or fires twice fails
     the row count, and a state round-trip bug fails the hash."""
-    from ..streaming import stateful
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Timers fire on the micro-batches AFTER the data drains — those
-    # are no-data batches, so the default-true conf must stay on for
-    # the timer wheel to turn. Pin it rather than assume the default.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-                   "true")
-    # Stage 1 (batch, oracle-checked elsewhere): amounts + delays.
-    base = st8_return_amounts(spark, sf_dir).select(  # raw fn, not the cache-releasing wrapper
-        F.concat(F.lit("txn"), F.col("event_id")).alias("txnId"),
-        "trader",
-        F.col("return_coins").alias("amount"),
-        # clamp the wall-clock delay to [1ms, 500ms] so the gate run
-        # stays fast and setTimeoutDuration gets a positive value; the
-        # emitted VALUES (what the oracle checks) don't depend on it
-        F.greatest(F.least(F.col("delay_ms"), F.lit(500)), F.lit(1))
-        .cast("int").alias("delay_ms"),
-    )
-    topic = _scratch("st8_topic_")
-    # the topic staging runs under the state-store count too
-    with _stream_partitions(spark):
-        expected = base.count()
-        base.write.mode("overwrite").parquet(topic)
-
-    src = spark.readStream.schema(
-        "txnId string, trader string, amount double, delay_ms int"
-    ).parquet(topic)
-    out = stateful.delayed_return_stream(
-        src,
-        "txnId string, trader string, type string, coinsDiff double, "
-        "investDiff int",
-        lambda row: row["amount"],
-    )
-    emitted = _run_stream_to_table(spark, out, "st8_stream",
-                                   until_rows=expected)
-    got = emitted.count()
-    if got < expected:
-        # A silent partial result would surface as a confusing gate
-        # hash mismatch; fail loudly with the real diagnosis instead.
-        raise RuntimeError(
-            f"streaming_st8_timer: only {got}/{expected} timers fired "
-            "within the 180 s deadline — timer wheel stalled (check "
-            "spark.sql.streaming.noDataMicroBatches.enabled and the "
-            "trigger interval)")
-    return emitted.select(
-        F.col("txnId").alias("txn_id"), "trader",
-        F.col("type").alias("utype"),
-        F.col("coinsDiff").alias("coins_diff"),
-        F.col("investDiff").alias("invest_diff"))
+    return _st8_returns(spark, sf_dir, "streaming_st8_timer",
+                        event_time=False)
 
 
-@register("streaming_st8_event_time", f"""
-WITH base AS ({ORACLES['st8_return_amounts']})
-SELECT concat('txn', event_id) AS txn_id, trader,
-       'RETURN' AS utype, return_coins AS coins_diff,
-       CAST(-1 AS INTEGER) AS invest_diff
-FROM base
-""")
+@register("streaming_st8_event_time", _ST8_RETURNS_SQL)
 def streaming_st8_event_time(spark, sf_dir):
     """ST8's EVENT-TIME timer path through the LIVE streaming runtime
-    (stateful.delayed_return_event_time_stream — the deterministic-
-    replay variant of MarketDataflow.java:348-392's processing-time
-    timer): each INVEST stashes (trader, amount) keyed by txnId and
-    registers an EventTimeTimeout at event_time + delay_ms; the RETURN
-    updater is emitted only when the WATERMARK passes that timestamp.
-    A single max-event-time heartbeat row (whose own timer is parked
-    beyond any horizon) advances the watermark past every timeout, so
-    all timers fire on the next micro-batch — by stream position, not
-    wall clock. Same oracle as streaming_st8_timer: the emitted RETURN
-    multiset must equal the batch-precomputed amounts, so a timer that
-    never fires, fires twice, or loses state fails the gate."""
-    from ..streaming import stateful
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # The firing micro-batch is a NO-DATA batch (the watermark advances
-    # after the data batch commits); the timer wheel needs this on.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-                   "true")
-    base = st8_return_amounts(spark, sf_dir).select(  # raw fn, not the cache-releasing wrapper
-        F.concat(F.lit("txn"), F.col("event_id")).alias("txnId"),
-        "trader",
-        F.col("return_coins").alias("amount"),
-        # event-time position: a fixed epoch plus a per-txn sub-second
-        # offset; delays clamped to [1ms, 500ms]. The emitted VALUES
-        # (what the oracle hashes) don't depend on either.
-        F.greatest(F.least(F.col("delay_ms"), F.lit(500)), F.lit(1))
-        .cast("long").alias("delay_ms"),
-        F.timestamp_millis(
-            F.lit(1767225600000)  # 2026-01-01T00:00:00Z
-            + F.pmod(F.col("event_id"), F.lit(1000))).alias("event_time"),
-    )
-    # one heartbeat an hour past every possible timeout pushes the
-    # watermark over all of them; its own timer is parked ~12 days out
-    # so it never emits
-    heartbeat = spark.range(1).select(
-        F.lit("__wm_heartbeat__").alias("txnId"),
-        F.lit("hb").alias("trader"),
-        F.lit(0.0).alias("amount"),
-        F.lit(1_000_000_000).cast("long").alias("delay_ms"),
-        F.timestamp_millis(
-            F.lit(1767225600000 + 3_600_000)).alias("event_time"))
-    topic = _scratch("st8et_topic_")
-    # the topic staging runs under the state-store count too
-    with _stream_partitions(spark):
-        expected = base.count()
-        base.unionByName(heartbeat).write.mode("overwrite").parquet(topic)
-
-    src = spark.readStream.schema(
-        "txnId string, trader string, amount double, delay_ms long, "
-        "event_time timestamp"
-    ).parquet(topic)
-    out = stateful.delayed_return_event_time_stream(
-        src,
-        "txnId string, trader string, type string, coinsDiff double, "
-        "investDiff int",
-        lambda row: row["amount"],
-    )
-    emitted = _run_stream_to_table(spark, out, "st8et_stream",
-                                   until_rows=expected)
-    got = emitted.count()
-    if got < expected:
-        raise RuntimeError(
-            f"streaming_st8_event_time: only {got}/{expected} event-time "
-            "timers fired within the 180 s deadline — watermark did not "
-            "pass the timeouts (check the heartbeat row and "
-            "spark.sql.streaming.noDataMicroBatches.enabled)")
-    return emitted.select(
-        F.col("txnId").alias("txn_id"), "trader",
-        F.col("type").alias("utype"),
-        F.col("coinsDiff").alias("coins_diff"),
-        F.col("investDiff").alias("invest_diff"))
+    (stateful.delayed_return_stream with a ``time_col`` — the
+    deterministic-replay variant of MarketDataflow.java:348-392's
+    processing-time timer): each INVEST stashes (trader, amount) keyed
+    by txnId and registers an EventTimeTimeout at event_time +
+    delay_ms; the RETURN updater is emitted only when the WATERMARK
+    passes that timestamp. A single max-event-time heartbeat row
+    (whose own timer is parked beyond any horizon) advances the
+    watermark past every timeout, so all timers fire on the next
+    micro-batch — by stream position, not wall clock. Same oracle as
+    streaming_st8_timer: the emitted RETURN multiset must equal the
+    batch-precomputed amounts, so a timer that never fires, fires
+    twice, or loses state fails the gate."""
+    return _st8_returns(spark, sf_dir, "streaming_st8_event_time",
+                        event_time=True)
 
 
 @register("streaming_w4_cogroup", ORACLES["w4_cogroup_latest"])
@@ -9537,9 +9375,12 @@ def streaming_st3_burst(spark, sf_dir):
 # the run-lifecycle helpers at the top of the module).
 # ---------------------------------------------------------------------------
 
-def _events_stream(spark, sf_dir):
+def _events_stream(spark, sf_dir, staged_dir: str | None = None,
+                   max_files: int | None = None):
     """readStream over the events parquet with the same ts normalization
-    as the batch ``load``.
+    as the batch ``load`` — or over every parquet file in ``staged_dir``,
+    a staged copy written in the same on-disk encoding, at most
+    ``max_files`` per micro-batch.
 
     readStream needs an explicit schema, so probe the BATCH schema first
     and build the stream schema to match the on-disk encoding — hard-coding
@@ -9556,16 +9397,17 @@ def _events_stream(spark, sf_dir):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ts_dtype, ts_unit = _events_ts_meta(spark, sf_dir)
-    return (
-        spark.readStream.schema(
-            f"event_id long, ts {ts_dtype}, user_id long, "
-            "event_type string, value double, props string")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("event_id",
-                _ts_to_utc_timestamp(ts_dtype, ts_unit).alias("ts"),
-                "user_id", "event_type", "value", "props")
-    )
+    reader = spark.readStream.schema(
+        f"event_id long, ts {ts_dtype}, user_id long, "
+        "event_type string, value double, props string")
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files))
+    return (reader.option("pathGlobFilter",
+                          "*.parquet" if staged_dir else "events.parquet")
+            .parquet(staged_dir or sf_dir)
+            .select("event_id",
+                    _ts_to_utc_timestamp(ts_dtype, ts_unit).alias("ts"),
+                    "user_id", "event_type", "value", "props"))
 
 
 def _staged_events_with_sentinel(spark, sf_dir, sent_us: int,
@@ -9579,16 +9421,14 @@ def _staged_events_with_sentinel(spark, sf_dir, sent_us: int,
     input into, the watermark-lifting sentinel is CAUSALLY LAST: it
     can never advance the global watermark past real events still in
     flight, which is what made the round-12 projection sentinel
-    single-batch-only. Same ts normalization as ``_events_stream``
-    (the sentinel file is written in the data files' own on-disk
-    encoding so one stream schema covers both)."""
+    single-batch-only. Read through ``_events_stream`` (the sentinel
+    file is written in the data files' own on-disk encoding so one
+    stream schema covers both)."""
     import time as time_mod
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ts_dtype, ts_unit = _events_ts_meta(spark, sf_dir)
     src = os.path.join(sf_dir, "events.parquet")
     files = ([os.path.join(src, f) for f in sorted(os.listdir(src))
@@ -9616,15 +9456,7 @@ def _staged_events_with_sentinel(spark, sf_dir, sent_us: int,
     newest = max(max(os.stat(f).st_mtime for f in files),
                  time_mod.time()) + 2.0
     os.utime(sent_path, (newest, newest))
-    reader = spark.readStream.schema(
-        f"event_id long, ts {ts_dtype}, user_id long, "
-        "event_type string, value double, props string")
-    if max_files is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files))
-    return (reader.option("pathGlobFilter", "*.parquet").parquet(d)
-            .select("event_id",
-                    _ts_to_utc_timestamp(ts_dtype, ts_unit).alias("ts"),
-                    "user_id", "event_type", "value", "props"))
+    return _events_stream(spark, sf_dir, d, max_files)
 
 
 def _run_stream_update_latest(spark, agg, prefix: str,

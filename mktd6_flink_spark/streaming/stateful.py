@@ -831,18 +831,34 @@ def apply_per_event_stream(df: DataFrame, key_cols: list[str],
 
 def delayed_return_stream(df: DataFrame, out_schema: str | StructType,
                           compute_return: Callable[[dict], float],
-                          delay_ms_col: str = "delay_ms") -> DataFrame:
-    """ST8 — delayed investment return with a processing-time timer
+                          delay_ms_col: str = "delay_ms",
+                          time_col: str | None = None,
+                          watermark: str = "0 milliseconds") -> DataFrame:
+    """ST8 — delayed investment return with a timer
     (MarketDataflow.java:348-392): keyed by txnId; on the investment
     event, stash (trader, return_amount) in state and register a
-    processing-time timeout; when the timeout fires, emit the RETURN
+    timeout; when the timeout fires, emit the RETURN
     TraderStateUpdater (coinsDiff=return, investDiff=-1).
 
     ``compute_return`` injects the (seeded in tests, entropic in prod)
     log-normal return calculation — the reference samples
     LogNormal(0.035 + e^(−1−total/1000), 0.01) * investedCoins.
+
+    Without ``time_col`` the timer is the reference's processing-time
+    timer (MarketDataflow.java:374): it fires ``delay_ms`` of wall
+    clock later, on a later micro-batch. With ``time_col`` it is an
+    event-time timer: the timeout is ``row[time_col] + delay_ms`` and
+    fires when the WATERMARK passes it — deterministic under replay (a
+    reprocessed stream fires the same timers at the same stream
+    positions, which wall-clock timers cannot promise), the right
+    choice when the delay models stream time rather than real time.
+    Late data beyond ``watermark`` is then dropped by the engine before
+    reaching the state function.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    if time_col is not None:
+        df = df.withWatermark(time_col, watermark)
 
     def fn(key: tuple, pdfs: Iterator["pd.DataFrame"],
            state: "GroupState") -> Iterator["pd.DataFrame"]:
@@ -863,71 +879,24 @@ def delayed_return_stream(df: DataFrame, out_schema: str | StructType,
             for row in pdf.to_dict("records"):
                 amount = compute_return(row)
                 state.update((str(row["trader"]), float(amount)))
-                # Spark requires a strictly positive duration; the
-                # reference's registerProcessingTimeTimer allows 0 —
-                # clamp to the 1 ms minimum granularity.
-                state.setTimeoutDuration(max(int(row[delay_ms_col]), 1))
+                if time_col is None:
+                    # Spark requires a strictly positive duration; the
+                    # reference's registerProcessingTimeTimer allows 0
+                    # — clamp to the 1 ms minimum granularity.
+                    state.setTimeoutDuration(
+                        max(int(row[delay_ms_col]), 1))
+                else:
+                    state.setTimeoutTimestamp(
+                        int(round(row[time_col].timestamp() * 1000.0))
+                        + int(row[delay_ms_col]))
         yield pd.DataFrame(
             columns=["txnId", "trader", "type", "coinsDiff", "investDiff"])
 
     return df.groupBy("txnId").applyInPandasWithState(
         fn, out_schema,
         "trader string, amount double",
-        "append", GroupStateTimeout.ProcessingTimeTimeout)
-
-
-def delayed_return_event_time_stream(
-        df: DataFrame, out_schema: str | StructType,
-        compute_return: Callable[[dict], float],
-        time_col: str = "event_time",
-        delay_ms_col: str = "delay_ms",
-        watermark: str = "0 milliseconds") -> DataFrame:
-    """ST8's EVENT-TIME analog. The reference only registers
-    processing-time timers (MarketDataflow.java:374); this variant keys
-    the same delayed-return semantics to the event-time clock instead:
-    the timeout is ``row[time_col] + delay_ms`` and fires when the
-    WATERMARK passes it — deterministic under replay (a reprocessed
-    stream fires the same timers at the same stream positions, which
-    wall-clock timers cannot promise), the right choice when the delay
-    models stream time rather than real time.
-
-    Requires an event-time watermark; late data beyond ``watermark`` is
-    dropped by the engine before reaching the state function.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    df = df.withWatermark(time_col, watermark)
-
-    def fn(key: tuple, pdfs: Iterator["pd.DataFrame"],
-           state: "GroupState") -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        if state.hasTimedOut:
-            trader, amount = state.get
-            state.remove()
-            yield pd.DataFrame([{
-                "txnId": key[0],
-                "trader": trader,
-                "type": "RETURN",
-                "coinsDiff": amount,
-                "investDiff": -1,
-            }])
-            return
-        for pdf in pdfs:
-            for row in pdf.to_dict("records"):
-                amount = compute_return(row)
-                state.update((str(row["trader"]), float(amount)))
-                fire_at_ms = (
-                    int(round(row[time_col].timestamp() * 1000.0))
-                    + int(row[delay_ms_col]))
-                state.setTimeoutTimestamp(fire_at_ms)
-        yield pd.DataFrame(
-            columns=["txnId", "trader", "type", "coinsDiff", "investDiff"])
-
-    return df.groupBy("txnId").applyInPandasWithState(
-        fn, out_schema,
-        "trader string, amount double",
-        "append", GroupStateTimeout.EventTimeTimeout)
+        "append", GroupStateTimeout.ProcessingTimeTimeout
+        if time_col is None else GroupStateTimeout.EventTimeTimeout)
 
 
 # Convenience pack/unpack for single-double states (EMA, product, sums).

@@ -97,7 +97,8 @@ def test_degenerate_documents_cross_engine(spark, degenerate_dir, name):
     assert got == want, (name, got[:3], want[:3])
 
 
-def test_orc_roundtrip_degenerate_fidelity(spark, degenerate_dir):
+def test_orc_roundtrip_degenerate_fidelity(spark, degenerate_dir,
+                                          tmp_path):
     """ORC write/read must preserve the pathological corpus byte-for-
     byte — NULL text AND NULL lang/n_chars, empty string (distinct
     from NULL), whitespace-only, multi-byte-free punctuation soup, a
@@ -105,14 +106,12 @@ def test_orc_roundtrip_degenerate_fidelity(spark, degenerate_dir):
     fidelity by aggregate at the gate; this pins it row-by-row on the
     values most likely to diverge (NULL vs '' is exactly the class a
     format shim gets wrong). Unicode is exercised too."""
-    import tempfile
-
     src = spark.read.parquet(
         os.path.join(degenerate_dir, "documents.parquet"))
     extra = spark.createDataFrame(
         [(9, "héllo wörld 中文 🙂", "und", "wiki", 17)], src.schema)
     df = src.unionByName(extra)
-    base = tempfile.mkdtemp(prefix="orc_degen_")
+    base = str(tmp_path)
     df.write.option("compression", "snappy").orc(f"{base}/docs")
     back = spark.read.orc(f"{base}/docs")
     assert back.schema == df.schema

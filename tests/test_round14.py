@@ -5,7 +5,6 @@ pins."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,7 +24,7 @@ def _tiny_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, lang string, text string")
 
 
-def test_streaming_fertility_multibatch_zero_state(spark):
+def test_streaming_fertility_multibatch_zero_state(spark, tmp_path):
     """The r12 streaming fertility kept one state-store row per
     (lang, doc_id) forever — O(corpus) state. The r14 rewrite
     collapses per-doc inside foreachBatch: run it over the docs SPLIT
@@ -39,13 +38,14 @@ def test_streaming_fertility_multibatch_zero_state(spark):
 
     docs = _tiny_docs(spark)
     vdf = _fertility_vocab_df(spark, docs)
-    d = tempfile.mkdtemp(prefix="fert_docs_")
+    d = str(tmp_path / "fert_docs")
     for i in range(3):
         (docs.filter((F.col("doc_id") % 3) == i)
          .coalesce(1).write.mode("append")
          .parquet(os.path.join(d, f"part{i}")))
     # flatten: one dir, three files
-    flat = tempfile.mkdtemp(prefix="fert_flat_")
+    flat = str(tmp_path / "fert_flat")
+    os.mkdir(flat)
     n = 0
     for i in range(3):
         pd_dir = os.path.join(d, f"part{i}")
@@ -180,6 +180,24 @@ def test_gate_fingerprint_sees_function_body_imports():
     assert "_destuff" in blob  # jpeg.py internals reached the blob
 
 
+def test_gate_fingerprint_follows_stream_twin_closure():
+    """A _stream_twin entry's source is the shared factory body; its
+    pipeline lives in the closure, which the fingerprint must follow —
+    the twin's blob reaches jpeg.py, and two twins hash differently."""
+    import importlib.util
+    spec = importlib.util.spec_from_file_location(
+        "gate_window", "tools/gate_window.py")
+    gw = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gw)
+    from mktd6_flink_spark.plans import driver_queries as dq
+
+    parts = []
+    gw._expand(dq.QUERIES["streaming_decode_jpeg"], dq, parts, set(), 0)
+    assert "_destuff" in "\n".join(parts)
+    fps = gw._entry_fingerprints()
+    assert fps["streaming_decode_bmp"] != fps["streaming_decode_gif"]
+
+
 # ----------------------------------- grouped top-5 == window (property)
 
 def test_grouped_top5_equals_row_number_window(spark):
@@ -211,7 +229,7 @@ def test_grouped_top5_equals_row_number_window(spark):
 
 # --------------------------------- foreachBatch replay idempotence
 
-def test_fertility_spill_replay_is_idempotent(spark):
+def test_fertility_spill_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: the engine REPLAYS the last
     batch id after a failure. The spill writer must converge on
     replay (batch-id-keyed overwrite), not duplicate rows — call the
@@ -221,7 +239,7 @@ def test_fertility_spill_replay_is_idempotent(spark):
 
     docs = _tiny_docs(spark)
     vdf = _fertility_vocab_df(spark, docs)
-    out = tempfile.mkdtemp(prefix="fert_replay_")
+    out = str(tmp_path / "fert_replay")
     w = _fertility_spill_writer(vdf, out)
     w(docs, 0)
     w(docs, 0)  # simulated replay of the same micro-batch
@@ -232,7 +250,7 @@ def test_fertility_spill_replay_is_idempotent(spark):
         sorted(map(tuple, want.collect()))
 
 
-def test_fertility_stream_crash_restart_exactly_once(spark):
+def test_fertility_stream_crash_restart_exactly_once(spark, tmp_path):
     """REAL checkpoint recovery, not simulation: the stream CRASHES
     after spilling its first micro-batch (a poison flag raises inside
     foreachBatch), then a second start on the SAME checkpoint + spill
@@ -244,12 +262,13 @@ def test_fertility_stream_crash_restart_exactly_once(spark):
 
     docs = _tiny_docs(spark)
     vdf = _fertility_vocab_df(spark, docs)
-    src = tempfile.mkdtemp(prefix="fert_crash_src_")
+    src = str(tmp_path / "fert_crash_src")
     for i in range(3):
         (docs.filter((F.col("doc_id") % 3) == i).coalesce(1)
          .write.mode("overwrite")
          .parquet(os.path.join(src, f"stage{i}")))
-    flat = tempfile.mkdtemp(prefix="fert_crash_flat_")
+    flat = str(tmp_path / "fert_crash_flat")
+    os.mkdir(flat)
     n = 0
     for i in range(3):
         sd = os.path.join(src, f"stage{i}")
@@ -258,8 +277,9 @@ def test_fertility_stream_crash_restart_exactly_once(spark):
                 os.symlink(os.path.join(sd, f),
                            os.path.join(flat, f"d{n:03d}.parquet"))
                 n += 1
-    out_dir = tempfile.mkdtemp(prefix="fert_crash_out_")
-    ckpt = tempfile.mkdtemp(prefix="fert_crash_ckpt_")
+    out_dir = str(tmp_path / "fert_crash_out")
+    os.mkdir(out_dir)
+    ckpt = str(tmp_path / "fert_crash_ckpt")
     poison = os.path.join(out_dir, "_poison")
     open(poison, "w").write("1")
     inner = _fertility_spill_writer(vdf, out_dir)

@@ -298,7 +298,7 @@ def test_st8_delayed_return_timer(spark, tmp_path):
 
 def test_st8_event_time_timer(spark, tmp_path):
     """Event-time analog of the ST8 timer
-    (delayed_return_event_time_stream): the RETURN fires when the
+    (delayed_return_stream with a time_col): the RETURN fires when the
     WATERMARK passes eventTime + delay — driven by later event-time
     heartbeats, independent of wall-clock (deterministic under
     replay, unlike the reference's processing-time timer)."""
@@ -312,11 +312,12 @@ def test_st8_event_time_timer(spark, tmp_path):
     sources.write_stream_input(
         spark, in_dir, [("txnE", "t1", 4.0, 1000, base)], schema)
     stream = sources.file_stream_source(spark, in_dir, schema)
-    out = stateful.delayed_return_event_time_stream(
+    out = stateful.delayed_return_stream(
         stream,
         "txnId string, trader string, type string, coinsDiff double, "
         "investDiff int",
-        compute_return=lambda row: row["invested"] * 1.5)
+        compute_return=lambda row: row["invested"] * 1.5,
+        time_col="event_time")
     q = (out.writeStream.format("memory").queryName("st8et")
          .option("checkpointLocation", ckpt)
          .trigger(processingTime="200 milliseconds").start())

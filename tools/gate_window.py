@@ -122,6 +122,14 @@ def _expand(obj, owner_mod, parts: list[str], visited: set, depth: int):
                 .startswith("mktd6_flink_spark")):
             _expand(child, sys.modules.get(child.__module__, owner_mod),
                     parts, visited, depth + 1)
+    # a factory-made entry (``_stream_twin``) shares one source: its
+    # pipeline and sink live in the closure
+    for cell in getattr(inspect.unwrap(obj), "__closure__", None) or ():
+        child = cell.cell_contents
+        if (callable(child) and getattr(child, "__module__", "")
+                .startswith("mktd6_flink_spark")):
+            _expand(child, sys.modules.get(child.__module__, owner_mod),
+                    parts, visited, depth + 1)
     _fold_body_imports(src, owner_mod, parts, visited, depth)
 
 

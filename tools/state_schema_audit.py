@@ -30,12 +30,13 @@ Usage:
     python tools/state_schema_audit.py streaming_cep_pattern ...
     python tools/state_schema_audit.py --growth       # unbounded-state audit
 
-Exit code 1 on any violation. The two timer entries
-(``delayed_return_stream`` / ``delayed_return_event_time_stream``)
-declare ``trader string, amount double`` and update with a literal
-``(str(...), float(...))`` tuple — statically range-safe; they are
-covered by the same wrapper only if routed through
-``apply_per_event_stream``, and noted as static-pass otherwise.
+Exit code 1 on any violation. The two timer entries share
+``delayed_return_stream`` (processing-time timer, or event-time when
+given a ``time_col``), which declares ``trader string, amount double``
+and updates with a literal ``(str(...), float(...))`` tuple —
+statically range-safe; it is covered by the same wrapper only if
+routed through ``apply_per_event_stream``, and noted as static-pass
+otherwise.
 """
 
 from __future__ import annotations
